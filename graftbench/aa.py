@@ -1,16 +1,19 @@
 """A/A steadiness check: two sets of benchmark runs of the same commit.
 
-    python3 graftbench/aa.py [--runs 10] [--sets 2] [--workloads a,b] [--trace 0]
+    python3 graftbench/aa.py [--runs 10]
 
-Run from the root of a checkout. Each set runs every workload once per
-seed 1..runs, one run at a time, with ``run_seconds`` from BENCHMARK.json.
+Run from the root of a checkout. Each of the two sets runs every workload
+once per seed 1..runs, untraced, one run at a time, with ``run_seconds``
+from BENCHMARK.json.
 For every metric and workload it prints, per set: the sample count, median,
 quartiles, the spread (quartile distance over median) and the highest
 percentile with at least ten samples beyond it; then the change of the
 second set's median against the first. A metric is flagged when its spread
 reaches a third of its bound or its median moves by more than its bound.
-It also prints the job and stage counts per warm pass seen across all runs
-and the passes the drift flag named. Raw results go to
+Per set it also prints the medians of the environment stamp (steal, other
+processes' CPU share, loadavg and the probe times), which tell a slower
+box from a slower program; then the job and stage counts per warm pass
+seen across all runs and the passes the drift flag named. Raw results go to
 ``.bench_build/graftbench/aa.json``.
 """
 import argparse
@@ -37,9 +40,13 @@ def describe(values):
             "tail": None if p is None else (p, sorted(values)[int(len(values) * p / 100)])}
 
 
-def run_once(workload, seed, seconds, trace):
+SETS = 2
+ENV = ("steal_share", "other_cpu_share", "loadavg_start", "probe_before_s", "probe_after_s")
+
+
+def run_once(workload, seed, seconds):
     cmd = [sys.executable, os.path.join(HERE, "run.py"), "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     t0 = time.time()
     out = subprocess.run(cmd, capture_output=True, text=True, timeout=900)
     lines = out.stdout.strip().splitlines()
@@ -53,21 +60,17 @@ def run_once(workload, seed, seconds, trace):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--runs", type=int, default=10)
-    ap.add_argument("--sets", type=int, default=2)
-    ap.add_argument("--workloads", default=None)
-    ap.add_argument("--trace", type=int, default=0)
     args = ap.parse_args()
     with open("BENCHMARK.json") as f:
         bench = json.load(f)
-    workloads = (args.workloads.split(",") if args.workloads
-                 else [w["name"] for w in bench["workloads"]])
+    workloads = [w["name"] for w in bench["workloads"]]
     bounds = {m["name"]: m.get("bound") for m in bench["end_to_end"]}
 
     runs = []
-    for s in range(args.sets):
+    for s in range(SETS):
         for w in workloads:
             for seed in range(1, args.runs + 1):
-                r = run_once(w, seed, bench["run_seconds"], args.trace)
+                r = run_once(w, seed, bench["run_seconds"])
                 r["set"] = s
                 runs.append(r)
                 print("set %d %s seed %d: %.0f s, correct=%s" % (
@@ -84,22 +87,25 @@ def main():
         for name in mine[0]["result"]["metrics"]:
             bound = bounds.get(name)
             sets = [[r["result"]["metrics"][name]["value"] for r in mine if r["set"] == s]
-                    for s in range(args.sets)]
+                    for s in range(SETS)]
             descs = [describe(v) for v in sets]
             flags = []
             for d in descs:
                 tail = "-" if d["tail"] is None else "p%d=%.4g" % d["tail"]
                 print("  %-18s n=%d median=%.4g q1=%.4g q3=%.4g spread=%.3f %s" % (
                     name, d["n"], d["median"], d["q1"], d["q3"], d["spread"], tail))
-                if bound is not None and name != "setup_s" and d["spread"] >= bound / 3:
+                if bound is not None and d["spread"] >= bound / 3:
                     flags.append("spread %.3f >= bound/3" % d["spread"])
-            if len(descs) > 1:
-                change = descs[1]["median"] / descs[0]["median"] - 1
-                print("  %-18s median change %+.3f (bound %s)" % ("", change, bound))
-                if bound is not None and abs(change) > bound:
-                    flags.append("median moved %+.3f" % change)
+            change = descs[1]["median"] / descs[0]["median"] - 1
+            print("  %-18s median change %+.3f (bound %s)" % ("", change, bound))
+            if bound is not None and abs(change) > bound:
+                flags.append("median moved %+.3f" % change)
             for fl in flags:
                 print("  %-18s ** %s" % ("", fl))
+        for s in range(SETS):
+            env = [r["context"]["env"] for r in mine if r["set"] == s]
+            print("  env set %d medians: %s" % (s, " ".join(
+                "%s=%.3g" % (k, statistics.median(e[k] for e in env)) for k in ENV)))
         jobs = sorted({(p["jobs"], p["stages"]) for r in mine
                        for p in r["context"]["warm_passes"]})
         print("  (jobs, stages) per warm pass: %s" % jobs)

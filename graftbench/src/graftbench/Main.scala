@@ -22,7 +22,8 @@ object Main {
                                 wallS: Double, cpuS: Double, jitS: Double, gcS: Double,
                                 codegen: Long, engine: Counters, gapS: Double,
                                 spans: Seq[(Span, Counters)], tasks: Map[String, (Long, Long)],
-                                heapMb: Double, liveRdds: Int, liveMb: Double,
+                                peakHeapMb: Double, retainedHeapMb: Double,
+                                liveRdds: Int, liveMb: Double,
                                 outMb: Double, outFiles: Long, inMb: Double)
 
   def main(argv: Array[String]): Unit = {
@@ -44,6 +45,7 @@ object Main {
     val engine = new EngineListener
     sc.addSparkListener(engine)
     FlowAttempts.install()
+    Jvm.watchGcs()
     val workload = Workloads(name)
     val tracer = new Tracer(sc, s"$name-${arg("t0-ms")}")
     val setupS = (System.currentTimeMillis() - arg("t0-ms").toLong) / 1e3
@@ -63,6 +65,7 @@ object Main {
       FlowAttempts.drain()
       val (c0, j0, g0, cg0) = (Jvm.processCpuNs, Jvm.jitMs, Jvm.gcMs, Jvm.codegenCompiles)
       val spansBefore = tracer.spans.size
+      val up0 = Jvm.uptimeMs
       val ms0 = System.currentTimeMillis()
       val t0 = System.nanoTime()
       val outputs =
@@ -95,9 +98,13 @@ object Main {
       val spans = tracer.spans.drop(spansBefore).toSeq
         .map(s => s -> bySpan.getOrElse(s.id, new Counters))
       val storage = sc.getRDDStorageInfo
+      // the collections after the pass are counted too: they start the
+      // next pass from the retained set and give a reading when the pass
+      // itself collected nothing
+      val retainedMb = Jvm.heapAfterGcMb
       val p = Pass(i, phase, traced, wallS, (c1 - c0) / 1e9, (j1 - j0) / 1e3, (g1 - g0) / 1e3,
         cg1 - cg0, counters, counters.driverGapS(ms0, ms1), spans, tasks,
-        Jvm.heapAfterGcMb, storage.length,
+        math.max(retainedMb, Jvm.peakAfterGcMb(up0)), retainedMb, storage.length,
         storage.map(s => s.memSize + s.diskSize).sum / 1048576.0,
         outBytes / 1048576.0, outFiles, inMb)
       deleteTree(work.resolve(f"pass_${i - 1}%03d"))
@@ -108,9 +115,10 @@ object Main {
     val probeBefore = graft.BenchSentinel.probeOnce(spark)
     while (passes.size <= arg("warmup-passes").toInt)
       passes += runPass(passes.size + 1, "warmup", trace)
-    // trace runs alternate traced and untraced passes, for the overhead
+    // trace runs time traced and untraced passes in the order ABBA, so
+    // that passes getting faster through the run do not show as overhead
     for (n <- 0 until arg("timed-passes").toInt)
-      passes += runPass(passes.size + 1, "timed", trace && n % 2 == 0)
+      passes += runPass(passes.size + 1, "timed", trace && (n % 4 == 0 || n % 4 == 3))
     val probeAfter = graft.BenchSentinel.probeOnce(spark)
     val recall =
       if (name != "corpus_graph") -1.0
@@ -169,7 +177,8 @@ object Main {
       "wall_s" -> Json.num(p.wallS), "cpu_s" -> Json.num(p.cpuS),
       "jit_s" -> Json.num(p.jitS), "gc_s" -> Json.num(p.gcS),
       "codegen_compiles" -> Json.num(p.codegen), "driver_gap_s" -> Json.num(p.gapS),
-      "heap_after_gc_mb" -> Json.num(p.heapMb), "live_rdds" -> Json.num(p.liveRdds),
+      "peak_heap_mb" -> Json.num(p.peakHeapMb),
+      "retained_heap_mb" -> Json.num(p.retainedHeapMb), "live_rdds" -> Json.num(p.liveRdds),
       "live_mb" -> Json.num(p.liveMb), "output_mb" -> Json.num(p.outMb),
       "output_files" -> Json.num(p.outFiles), "input_mb" -> Json.num(p.inMb),
       "flow_tasks" -> Json.obj(p.tasks.toSeq.sortBy(_._1).map { case (t, (calls, attempts)) =>

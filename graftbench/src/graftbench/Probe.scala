@@ -153,6 +153,41 @@ object Jvm {
   def gcMs: Long =
     ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
 
+  def uptimeMs: Long = ManagementFactory.getRuntimeMXBean.getUptime
+
+  /** (start as JVM uptime in ms, heap in use after it in MB) of every
+    * collection since `watchGcs`, from the collectors' notifications.
+    */
+  private val afterGc = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double)]
+
+  def watchGcs(): Unit = {
+    import javax.management.{Notification, NotificationEmitter, NotificationListener}
+    import javax.management.openmbean.CompositeData
+    import com.sun.management.GarbageCollectionNotificationInfo
+    val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getType == java.lang.management.MemoryType.HEAP).map(_.getName).toSet
+    val listener = new NotificationListener {
+      override def handleNotification(n: Notification, handback: AnyRef): Unit =
+        if (n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
+          val gc = GarbageCollectionNotificationInfo
+            .from(n.getUserData.asInstanceOf[CompositeData]).getGcInfo
+          val used = gc.getMemoryUsageAfterGc.asScala
+            .collect { case (pool, u) if heapPools(pool) => u.getUsed }.sum
+          afterGc.add((gc.getStartTime, used / 1048576.0))
+        }
+    }
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.foreach {
+      case e: NotificationEmitter => e.addNotificationListener(listener, null, null)
+      case _ =>
+    }
+  }
+
+  /** Largest heap in use right after a collection that started at or
+    * after `fromUptimeMs`; 0 when none has been reported.
+    */
+  def peakAfterGcMb(fromUptimeMs: Long): Double =
+    afterGc.asScala.collect { case (t, mb) if t >= fromUptimeMs => mb }.maxOption.getOrElse(0.0)
+
   /** Heap in use right after a full collection: the retained set. A
     * collection queues Spark's ContextCleaner, which then drops the blocks
     * of unreachable RDDs, shuffles and broadcasts on its own thread, so
