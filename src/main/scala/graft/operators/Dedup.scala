@@ -5,7 +5,7 @@ import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{ColumnShim, HyperplaneCodes, MinHashSignature, ShingleHashes, SimHash64}
+import org.apache.spark.sql.graft.{CheckpointIds, ColumnShim, HyperplaneCodes, MinHashSignature, ShingleHashes, SimHash64}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Corpus deduplication (SURVEY.md §2 D1–D5) — the first pass of any
@@ -417,7 +417,7 @@ object Dedup {
     // free the PREVIOUS invocation's candidate frame (advice r14): the
     // eager checkpoint above otherwise accumulates one pair-sized block
     // set per invocation in a long-lived JVM — the same pathology
-    // CheckpointIds.free exists for. Invocations construct-then-consume
+    // CheckpointIds.scoped exists for. Invocations construct-then-consume
     // sequentially (Verify/Bench both materialize each query before
     // building the next), so the superseded frame has no live reader.
     val prevCand = lastMinhashCand.put(spark.sparkContext.applicationId,
@@ -997,19 +997,18 @@ object Dedup {
     * algorithm/scale discussion.
     */
   def clusterLabels(pairs: DataFrame): DataFrame =
-    clusterLabelsWithRounds(pairs)._1
+    CheckpointIds.scoped(pairs.sparkSession)(cp => clusterLabelsIn(cp, pairs)._1)
 
-  /** [[clusterLabels]] plus the number of propagate+shortcut rounds it
-    * took to converge — exposed so the deep-graph spec can pin the
-    * O(log n) bound.
+  /** [[clusterLabels]] inside the caller's checkpoint scope, with the
+    * number of propagate+shortcut rounds it took to converge — the
+    * deep-graph spec pins the O(log n) bound on it.
     */
-  private[graft] def clusterLabelsWithRounds(pairs: DataFrame): (DataFrame, Int) = {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id"))
-      .localCheckpoint()
+  private[graft] def clusterLabelsIn(cp: CheckpointIds.Scope,
+                                     pairs: DataFrame): (DataFrame, Int) = {
+    val edges = cp(pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))))
+    val init = cp(edges.select(col("src").as("id")).distinct()
+      .withColumn("lbl", col("id")))
     def propagate(ls: DataFrame): DataFrame = {
       val nbrMin = edges
         .join(ls.select(col("id").as("dst"), col("lbl").as("dst_lbl")), Seq("dst"))
@@ -1044,19 +1043,11 @@ object Dedup {
     // labels-vs-labels join. Both steps only ever LOWER labels, so a
     // round with neither step changing anything is a fixpoint of
     // neighbor-min — labels are componentwise-constant minima.
-    // No superseded-round freeing here (r14): unlike the k-truss /
-    // k-core edge frames, the label frames are pair-graph-node-sized
-    // (hundreds to low thousands of rows), so the per-round unpersist
-    // calls cost more than the blocks they reclaim.
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0) {
-      val mid = propagate(labels).localCheckpoint()
-      val next = shortcut(mid).localCheckpoint()
-      changed = next.filter(col("chg")).count()
-      labels = next.select("id", "lbl")
-      rounds += 1
-    }
+    // State: (labels, rows the round changed).
+    val ((labels, _), rounds) = cp.iterate((init, 1L), Int.MaxValue) { case (labels, _) =>
+      val next = cp(shortcut(cp(propagate(labels))))
+      (next.select("id", "lbl"), next.filter(col("chg")).count())
+    }(_._2 == 0L)
     (labels, rounds)
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointIds
 
 import graft.Tables
 
@@ -45,6 +46,13 @@ object Graph {
         col("o_custkey"), col("l_suppkey"), col("l_partkey"))
   }
 
+  /** A directed (src, dst, …) pair set walked in both directions: every
+    * row plus its reverse, any other column (an edge weight) riding
+    * along.
+    */
+  private def undirected(pairs: DataFrame): DataFrame =
+    pairs.unionByName(pairs.select(col("dst").as("src") +: col("src").as("dst") +:
+      pairs.columns.filterNot(Set("src", "dst")).toSeq.map(col): _*))
 
   /** G1: fixed-iteration PageRank over the customer↔supplier trade
     * graph (nodes: customers as `2·custkey`, suppliers as
@@ -80,37 +88,25 @@ object Graph {
   /** [[pageRank]]'s core over ANY distinct directed pair set (walked
     * in both directions) — split out so specs can feed hand graphs.
     */
-  private[graft] def pageRankOf(pairs: DataFrame, iters: Int, topK: Int): DataFrame = {
-    val edges = pairs
-      .unionByName(pairs.select(col("dst").as("src"), col("src").as("dst")))
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    var ranks = deg.select(col("src").as("node"), lit(1000000L).as("r"))
-      .localCheckpoint()
-    val withDeg = edges.join(deg, "src").localCheckpoint()
-    for (_ <- 1 to iters) {
-      val prev = ranks
-      ranks = withDeg
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"), expr("r div d").as("c"))
-        .groupBy("dst").agg(sum("c").as("s"))
-        .select(col("dst").as("node"),
-          expr("150000L + (85L * s) div 100L").as("r"))
-        .localCheckpoint()
-      // the superseded round's blocks are dead once the new eager
-      // checkpoint materializes (the r14 orphaned-checkpoint finding,
-      // extended to the rank loops per VERDICT r14 #2; see
-      // CheckpointIds.free)
-      org.apache.spark.sql.graft.CheckpointIds.free(prev)
+  private[graft] def pageRankOf(pairs: DataFrame, iters: Int, topK: Int): DataFrame =
+    CheckpointIds.scoped(pairs.sparkSession) { cp =>
+      val edges = undirected(pairs)
+      val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
+      val init = cp(deg.select(col("src").as("node"), lit(1000000L).as("r")))
+      val withDeg = cp(edges.join(deg, "src"))
+      val (ranks, _) = cp.iterate(init, iters) { ranks =>
+        cp(withDeg
+          .join(ranks.withColumnRenamed("node", "src"), "src")
+          .select(col("dst"), expr("r div d").as("c"))
+          .groupBy("dst").agg(sum("c").as("s"))
+          .select(col("dst").as("node"),
+            expr("150000L + (85L * s) div 100L").as("r")))
+      }(_ => false)
+      ranks
+        .orderBy(col("r").desc, col("node"))
+        .limit(topK)
+        .select(col("node"), col("r").as("rank_micro"))
     }
-    // the edge-sized frame is consumed by the loop's (eager, already
-    // materialized) round checkpoints — only the final ranks frame
-    // backs the returned plan
-    org.apache.spark.sql.graft.CheckpointIds.free(withDeg)
-    ranks
-      .orderBy(col("r").desc, col("node"))
-      .limit(topK)
-      .select(col("node"), col("r").as("rank_micro"))
-  }
 
   /** G4: personalized PageRank — G1's walk with the teleport
     * concentrated on a SEED COHORT (one nation's customers): "who is
@@ -144,41 +140,32 @@ object Graph {
     * set (walked both directions) and seed-node set.
     */
   private[graft] def pprOf(pairs: DataFrame, seeds: DataFrame,
-                           iters: Int, topK: Int): DataFrame = {
-    val edges = pairs
-      .unionByName(pairs.select(col("dst").as("src"), col("src").as("dst")))
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    val reset = deg.select(col("src").as("node"))
-      .join(seeds.select(col("snode").as("node"), lit(150000L).as("rv")),
-        Seq("node"), "left")
-      .select(col("node"), coalesce(col("rv"), lit(0L)).as("reset"))
-      .localCheckpoint()
-    val withDeg = edges.join(deg, "src").localCheckpoint()
-    var ranks = reset
-      .select(col("node"), when(col("reset") > 0, 1000000L).otherwise(0L).as("r"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val prev = ranks
-      ranks = withDeg
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"), expr("r div d").as("c"))
-        .groupBy("dst").agg(sum("c").as("s"))
-        .join(reset.withColumnRenamed("node", "dst"), Seq("dst"))
-        .select(col("dst").as("node"),
-          (col("reset") + expr("(85L * s) div 100L")).as("r"))
-        .localCheckpoint()
-      // superseded round — free now, not at the next post-GC cleaner
-      // pass (r14 finding extended to the rank loops; reset stays: the
-      // final readout joins it)
-      org.apache.spark.sql.graft.CheckpointIds.free(prev)
+                           iters: Int, topK: Int): DataFrame =
+    CheckpointIds.scoped(pairs.sparkSession) { cp =>
+      val edges = undirected(pairs)
+      val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
+      val reset = cp(deg.select(col("src").as("node"))
+        .join(seeds.select(col("snode").as("node"), lit(150000L).as("rv")),
+          Seq("node"), "left")
+        .select(col("node"), coalesce(col("rv"), lit(0L)).as("reset")))
+      val withDeg = cp(edges.join(deg, "src"))
+      val init = cp(reset
+        .select(col("node"), when(col("reset") > 0, 1000000L).otherwise(0L).as("r")))
+      val (ranks, _) = cp.iterate(init, iters) { ranks =>
+        cp(withDeg
+          .join(ranks.withColumnRenamed("node", "src"), "src")
+          .select(col("dst"), expr("r div d").as("c"))
+          .groupBy("dst").agg(sum("c").as("s"))
+          .join(reset.withColumnRenamed("node", "dst"), Seq("dst"))
+          .select(col("dst").as("node"),
+            (col("reset") + expr("(85L * s) div 100L")).as("r")))
+      }(_ => false)
+      ranks.join(reset, Seq("node"))
+        .orderBy(col("r").desc, col("node"))
+        .limit(topK)
+        .select(col("node"), col("r").as("rank_micro"),
+          (col("reset") > 0).as("is_seed"))
     }
-    org.apache.spark.sql.graft.CheckpointIds.free(withDeg)
-    ranks.join(reset, Seq("node"))
-      .orderBy(col("r").desc, col("node"))
-      .limit(topK)
-      .select(col("node"), col("r").as("rank_micro"),
-        (col("reset") > 0).as("is_seed"))
-  }
 
   /** G3: community detection by synchronous label propagation (LPA,
     * Raghavan et al. 2007) over the customer↔supplier trade graph —
@@ -216,28 +203,21 @@ object Graph {
   /** [[labelProp]]'s core over ANY distinct directed pair set (walked
     * in both directions) — split out so specs can feed hand graphs.
     */
-  private[graft] def labelPropOf(pairs: DataFrame, iters: Int): DataFrame = {
-    val edges = pairs
-      .unionByName(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val prev = labels
-      labels = edges
-        .join(labels.withColumnRenamed("node", "src"), "src")
-        .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
-        .groupBy(col("dst"))
-        .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
-        .select(col("dst").as("node"), (-col("m.nl")).as("label"))
-        .localCheckpoint()
-      // superseded round — free now (r14 finding, rank/label loops)
-      org.apache.spark.sql.graft.CheckpointIds.free(prev)
+  private[graft] def labelPropOf(pairs: DataFrame, iters: Int): DataFrame =
+    CheckpointIds.scoped(pairs.sparkSession) { cp =>
+      val edges = cp(undirected(pairs))
+      val init = cp(edges.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("label")))
+      val (labels, _) = cp.iterate(init, iters) { labels =>
+        cp(edges
+          .join(labels.withColumnRenamed("node", "src"), "src")
+          .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
+          .groupBy(col("dst"))
+          .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
+          .select(col("dst").as("node"), (-col("m.nl")).as("label")))
+      }(_ => false)
+      labels.select(col("node"), col("label").as("community")).orderBy("node")
     }
-    org.apache.spark.sql.graft.CheckpointIds.free(edges)
-    labels.select(col("node"), col("label").as("community")).orderBy("node")
-  }
 
   /** G2: exact triangle counting over the co-ordered-parts graph
     * (undirected edge between two parts iff some order contains both —
@@ -571,61 +551,45 @@ object Graph {
         .select("a1", "b1", "a2", "b2", "a3", "b3", "dead")
     }
 
-    // Free a SUPERSEDED round's checkpoint blocks immediately (the
-    // r14 orphaned-checkpoint finding — see CheckpointIds.free): the
-    // bench's cold+3-warm loop accumulated the triangle-sized frames
-    // of every earlier run until storage-eviction churn degraded the
-    // later runs (the r7 pathology, re-measured this round as warm
-    // iters 11 s → 21 s inside one bench entry).
-    def free(frames: DataFrame*): Unit =
-      org.apache.spark.sql.graft.CheckpointIds.free(frames: _*)
-    // round 1: support from the full triangle stream; an edge in no
-    // triangle has sup 0 < k-2 and drops here. The support frame is
-    // kept (and decremented) across rounds.
-    var supFrame = supportOf(triples).localCheckpoint()
-    var surv = supFrame.filter(col("sup") >= k - 2).select("a", "b")
-    var survCount = surv.count()
-    var prevCount = edges.count()
-    var alive: DataFrame = null // materialized lazily at the first peel
-    var prevFlagged: DataFrame = null
-    var round = 2
-    while (round <= rounds && survCount < prevCount) {
-      // dropped = this round's cut (triangle-free edges never appear in
-      // supFrame — they are in no triangle, so they cannot kill one);
-      // prevCount - survCount bounds it above for the broadcast guard
-      val dropped = supFrame.filter(col("sup") < k - 2).select("a", "b")
-      val flagged = flagDead(if (alive == null) triples else alive,
-        dropped, prevCount - survCount).localCheckpoint()
-      if (prevFlagged != null) free(prevFlagged) // its alive view is consumed
-      prevFlagged = flagged
-      alive = flagged.filter(!col("dead"))
-        .select("a1", "b1", "a2", "b2", "a3", "b3")
-      // decrement surviving edges by their dead-triangle count; edges
-      // of dead triangles that themselves dropped simply never match
-      val decrements = flagged.filter(col("dead"))
-        .select(explode(array(
-          struct(col("a1").as("a"), col("b1").as("b")),
-          struct(col("a2").as("a"), col("b2").as("b")),
-          struct(col("a3").as("a"), col("b3").as("b")))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-        .groupBy("a", "b").agg(count(lit(1)).as("dec"))
-      val prevSup = supFrame
-      supFrame = supFrame.filter(col("sup") >= k - 2)
-        .join(decrements, Seq("a", "b"), "left")
-        .select(col("a"), col("b"),
-          (col("sup") - coalesce(col("dec"), lit(0L))).as("sup"))
-        .localCheckpoint()
-      free(prevSup) // new supFrame is materialized; the old one is dead
-      surv = supFrame.filter(col("sup") >= k - 2).select("a", "b")
-      prevCount = survCount
-      survCount = surv.count()
-      round += 1
+    def survivors(sup: DataFrame): DataFrame =
+      sup.filter(col("sup") >= k - 2).select("a", "b")
+    CheckpointIds.scoped(pairs.sparkSession) { cp =>
+      // round 1: support from the full triangle stream; an edge in no
+      // triangle has sup 0 < k-2 and drops here. The support frame is
+      // kept (and decremented) across rounds. State: (support, alive
+      // triangles — None until the first peel, survivor count,
+      // previous survivor count).
+      val sup1 = cp(supportOf(triples))
+      val init = (sup1, Option.empty[DataFrame], survivors(sup1).count(), edges.count())
+      val ((supFrame, _, _, _), _) = cp.iterate(init, rounds - 1) {
+        case (supFrame, alive, survCount, prevCount) =>
+          // dropped = this round's cut (triangle-free edges never appear
+          // in supFrame — they are in no triangle, so they cannot kill
+          // one); prevCount - survCount bounds it above for the
+          // broadcast guard
+          val dropped = supFrame.filter(col("sup") < k - 2).select("a", "b")
+          val flagged = cp(flagDead(alive.getOrElse(triples), dropped, prevCount - survCount))
+          // decrement surviving edges by their dead-triangle count; edges
+          // of dead triangles that themselves dropped simply never match
+          val decrements = flagged.filter(col("dead"))
+            .select(explode(array(
+              struct(col("a1").as("a"), col("b1").as("b")),
+              struct(col("a2").as("a"), col("b2").as("b")),
+              struct(col("a3").as("a"), col("b3").as("b")))).as("e"))
+            .select(col("e.a").as("a"), col("e.b").as("b"))
+            .groupBy("a", "b").agg(count(lit(1)).as("dec"))
+          val next = cp(supFrame.filter(col("sup") >= k - 2)
+            .join(decrements, Seq("a", "b"), "left")
+            .select(col("a"), col("b"),
+              (col("sup") - coalesce(col("dec"), lit(0L))).as("sup")))
+          (next, Some(flagged.filter(!col("dead")).select("a1", "b1", "a2", "b2", "a3", "b3")),
+            survivors(next).count(), survCount)
+      } { case (_, _, survCount, prevCount) => survCount >= prevCount }
+      val surv = survivors(supFrame)
+      surv.select(col("a").as("node")).unionByName(surv.select(col("b").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("truss_degree"))
+        .orderBy("node")
     }
-    // the last round's flagged frame is not part of the output lineage
-    if (prevFlagged != null) free(prevFlagged)
-    surv.select(col("a").as("node")).unionByName(surv.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("truss_degree"))
-      .orderBy("node")
   }
 
   /** The pre-round-11 full-recompute peel — one complete triangle pass
@@ -795,38 +759,28 @@ object Graph {
   /** [[kcore]]'s core over ANY distinct directed pair set (walked in
     * both directions).
     */
-  private[graft] def kcoreOf(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var e = pairs
-      .unionByName(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
-    // Early-exit on convergence (r14): an unchanged edge COUNT means
-    // no node dropped, so every remaining fixed round recomputes the
-    // identical edge set — the result is bit-identical with or
-    // without them (the scaladoc's own "extra rounds only re-confirm
-    // a converged core"). The count runs on the round's materialized
-    // checkpoint — one cheap scan versus a full agg+two-join round.
-    var prevCount = e.count()
-    var converged = false
-    for (_ <- 1 to rounds if !converged) {
-      val prev = e
-      val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select("src")
-      e = e.join(keep, "src")
-        .join(keep.withColumnRenamed("src", "dst"), "dst")
-        .select("src", "dst")
-        .localCheckpoint()
-      val n = e.count()
-      // the superseded round's blocks are dead — free them now rather
-      // than waiting on the post-GC ContextCleaner (the r14 orphaned-
-      // checkpoint finding; see CheckpointIds.free)
-      org.apache.spark.sql.graft.CheckpointIds.free(prev)
-      converged = n == prevCount
-      prevCount = n
+  private[graft] def kcoreOf(pairs: DataFrame, k: Int, rounds: Int): DataFrame =
+    CheckpointIds.scoped(pairs.sparkSession) { cp =>
+      val e0 = cp(undirected(pairs))
+      // Early-exit on convergence (r14): an unchanged edge COUNT means
+      // no node dropped, so every remaining fixed round recomputes the
+      // identical edge set — the result is bit-identical with or
+      // without them (the scaladoc's own "extra rounds only re-confirm
+      // a converged core"). The count runs on the round's materialized
+      // checkpoint — one cheap scan versus a full agg+two-join round.
+      // State: (edges, edge count, previous round's edge count).
+      val ((e, _, _), _) = cp.iterate((e0, e0.count(), -1L), rounds) { case (e, n, _) =>
+        val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= k).select("src")
+        val next = cp(e.join(keep, "src")
+          .join(keep.withColumnRenamed("src", "dst"), "dst")
+          .select("src", "dst"))
+        (next, next.count(), n)
+      } { case (_, n, prevN) => n == prevN }
+      e.groupBy(col("src").as("node"))
+        .agg(count(lit(1)).as("core_degree"))
+        .orderBy("node")
     }
-    e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("core_degree"))
-      .orderBy("node")
-  }
 
   /** G6: weighted single-source shortest paths by Bellman-Ford rounds
     * — relationship STRENGTH as distance on the trade graph: each
@@ -864,43 +818,36 @@ object Graph {
   /** [[sssp]]'s core over ANY weighted directed pair set (walked both
     * directions; source = the minimum node id).
     */
-  private[graft] def ssspOf(weighted: DataFrame, iters: Int, topK: Int): DataFrame = {
-    val INF = 1000000000000000L
-    val edges = weighted
-      .unionByName(weighted.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      .localCheckpoint()
-    val srcId = edges.agg(min("src")).head.getLong(0)
-    var dist = edges.select(col("src").as("node")).distinct()
-      .withColumn("dist", when(col("node") === srcId, 0L).otherwise(INF))
-      .localCheckpoint()
-    // Frontier relaxation (r14): a synchronous Bellman-Ford round only
-    // produces new candidates through nodes whose distance IMPROVED
-    // last round — an unchanged node's out-edges were already applied.
-    // Relaxing from the frontier alone yields the identical dist after
-    // every round while the per-round edges⋈state join shrinks with
-    // the frontier (to nothing once converged).
-    var frontier = dist.filter(col("dist") < INF)
-    for (_ <- 1 to iters) {
-      val relax = edges
-        .join(frontier.select(col("node").as("src"), col("dist").as("sd")), "src")
-        .groupBy(col("dst").as("node"))
-        .agg(min(col("sd") + col("w")).as("cand"))
-      val prev = dist
-      val joined = dist.join(relax, Seq("node"), "left")
-        .select(col("node"), col("dist").as("prev"),
-          least(col("dist"), coalesce(col("cand"), lit(INF))).as("dist"))
-        .localCheckpoint()
-      // superseded round — free now (r14 finding, iterative loops)
-      org.apache.spark.sql.graft.CheckpointIds.free(prev)
-      frontier = joined.filter(col("dist") < col("prev")).select("node", "dist")
-      dist = joined.select("node", "dist")
+  private[graft] def ssspOf(weighted: DataFrame, iters: Int, topK: Int): DataFrame =
+    CheckpointIds.scoped(weighted.sparkSession) { cp =>
+      val INF = 1000000000000000L
+      val edges = cp(undirected(weighted))
+      val srcId = edges.agg(min("src")).head.getLong(0)
+      val dist0 = cp(edges.select(col("src").as("node")).distinct()
+        .withColumn("dist", when(col("node") === srcId, 0L).otherwise(INF)))
+      // Frontier relaxation (r14): a synchronous Bellman-Ford round only
+      // produces new candidates through nodes whose distance IMPROVED
+      // last round — an unchanged node's out-edges were already applied.
+      // Relaxing from the frontier alone yields the identical dist after
+      // every round while the per-round edges⋈state join shrinks with
+      // the frontier (to nothing once converged). State: (dist, frontier).
+      val ((dist, _), _) = cp.iterate((dist0, dist0.filter(col("dist") < INF)), iters) {
+        case (dist, frontier) =>
+          val relax = edges
+            .join(frontier.select(col("node").as("src"), col("dist").as("sd")), "src")
+            .groupBy(col("dst").as("node"))
+            .agg(min(col("sd") + col("w")).as("cand"))
+          val joined = cp(dist.join(relax, Seq("node"), "left")
+            .select(col("node"), col("dist").as("prev"),
+              least(col("dist"), coalesce(col("cand"), lit(INF))).as("dist")))
+          (joined.select("node", "dist"),
+            joined.filter(col("dist") < col("prev")).select("node", "dist"))
+      }(_ => false)
+      dist.filter(col("dist") < INF)
+        .orderBy(col("dist"), col("node"))
+        .limit(topK)
+        .select(col("node"), col("dist").as("dist_micro"))
     }
-    org.apache.spark.sql.graft.CheckpointIds.free(edges)
-    dist.filter(col("dist") < INF)
-      .orderBy(col("dist"), col("node"))
-      .limit(topK)
-      .select(col("node"), col("dist").as("dist_micro"))
-  }
 
   /** G9: Adamic–Adar link prediction over the customer↔part
     * bipartite graph — score customer pairs by their shared PARTS,
@@ -1104,77 +1051,63 @@ object Graph {
     betweennessOf(tradePairs(spark, dir), iters, nSources, topK)
 
   private[graft] def betweennessOf(pairs: DataFrame, iters: Int,
-                                   nSources: Int, topK: Int): DataFrame = {
-    val edges = pairs
-      .unionByName(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
-    val sources = edges.select(col("src").as("node")).distinct()
-      .orderBy("node").limit(nSources)
-    // Per-level frames (r14): each BFS level is its own checkpointed
-    // frame — the accumulated dist is a union of materialized frames
-    // (free to read), never re-checkpointed per round, and the
-    // backward pass reads level r as frames(r) instead of filtering
-    // the whole accumulated table.
-    var frames = Vector(sources
-      .select(col("node"), col("node").as("s"), lit(0).as("d"), lit(1L).as("sigma"))
-      .localCheckpoint())
-    var frontier = frames(0)
-    for (r <- 1 to iters) {
-      // anti-join build side: the LAST TWO levels suffice (VERDICT r14
-      // #4, measured r15). relax emits neighbors of distance-(r-1)
-      // nodes; on an undirected graph a neighbor's true distance is
-      // within 1 of r-1, so any previously-seen (node, s) it can
-      // re-emit lives in frames(r-1) or frames(r-2) — levels ≤ r-3
-      // cannot be adjacent to the frontier and only inflate the build
-      // side (O(rounds × reached) read volume across the loop).
-      val seen = frames.takeRight(2).reduce(_ unionByName _)
-      val relax = edges
-        .join(frontier.select(col("node").as("src"), col("s"), col("sigma")), "src")
-        .groupBy(col("dst").as("node"), col("s"))
-        .agg(sum("sigma").as("sigma"))
-        .withColumn("d", lit(r))
-      frontier = relax
-        .join(seen.select("node", "s"), Seq("node", "s"), "left_anti")
-        .select("node", "s", "d", "sigma")
-        .localCheckpoint()
-      frames :+= frontier
+                                   nSources: Int, topK: Int): DataFrame =
+    CheckpointIds.scoped(pairs.sparkSession) { cp =>
+      val edges = cp(undirected(pairs))
+      val sources = edges.select(col("src").as("node")).distinct()
+        .orderBy("node").limit(nSources)
+      // Per-level frames (r14): each BFS level is its own checkpointed
+      // frame — the accumulated dist is a union of materialized frames
+      // (free to read), never re-checkpointed per round, and the
+      // backward pass reads level r as frames(r) instead of filtering
+      // the whole accumulated table. The state is the level vector, so
+      // every level stays live through the backward pass.
+      val init = Vector(cp(sources
+        .select(col("node"), col("node").as("s"), lit(0).as("d"), lit(1L).as("sigma"))))
+      val (frames, _) = cp.iterate(init, iters) { frames =>
+        // anti-join build side: the LAST TWO levels suffice (VERDICT r14
+        // #4, measured r15). relax emits neighbors of distance-(r-1)
+        // nodes; on an undirected graph a neighbor's true distance is
+        // within 1 of r-1, so any previously-seen (node, s) it can
+        // re-emit lives in frames(r-1) or frames(r-2) — levels ≤ r-3
+        // cannot be adjacent to the frontier and only inflate the build
+        // side (O(rounds × reached) read volume across the loop).
+        val seen = frames.takeRight(2).reduce(_ unionByName _)
+        val relax = edges
+          .join(frames.last.select(col("node").as("src"), col("s"), col("sigma")), "src")
+          .groupBy(col("dst").as("node"), col("s"))
+          .agg(sum("sigma").as("sigma"))
+          .withColumn("d", lit(frames.length))
+        frames :+ cp(relax
+          .join(seen.select("node", "s"), Seq("node", "s"), "left_anti")
+          .select("node", "s", "d", "sigma"))
+      }(_ => false)
+      // backward: level-r deltas feed level r-1; a node's whole δ
+      // arrives in one round, so the union of round frames is the total
+      val deltaFrames = (iters to 1 by -1).foldLeft(List.empty[DataFrame]) { (later, r) =>
+        val deltaAt = later.headOption.getOrElse(
+          frames(iters).select(col("node"), col("s"), lit(0L).as("dm")))
+        val vRows = frames(r)
+          .join(deltaAt, Seq("node", "s"), "left")
+          .select(col("node").as("dst"), col("s"),
+            col("sigma").as("v_sigma"),
+            coalesce(col("dm"), lit(0L)).as("v_dm"))
+        val uRows = frames(r - 1)
+          .select(col("node").as("src"), col("s"), col("sigma").as("u_sigma"))
+        cp(edges
+          .join(vRows, Seq("dst"))
+          .join(uRows, Seq("src", "s"))
+          .select(col("src").as("node"), col("s"),
+            expr("(u_sigma * (1000000L + v_dm)) div v_sigma").as("dm"))
+          .groupBy("node", "s").agg(sum("dm").as("dm"))) :: later
+      }
+      deltaFrames.reduce(_ unionByName _)
+        .filter(col("node") =!= col("s"))
+        .groupBy("node")
+        .agg(sum("dm").as("betweenness_micro"))
+        .orderBy(col("betweenness_micro").desc, col("node"))
+        .limit(topK)
     }
-    // backward: level-r deltas feed level r-1; a node's whole δ
-    // arrives in one round, so the union of round frames is the total
-    var deltaAt = frames(iters)
-      .select(col("node"), col("s"), lit(0L).as("dm"))
-    var deltaFrames = List[DataFrame]()
-    for (r <- iters to 1 by -1) {
-      val vRows = frames(r)
-        .join(deltaAt, Seq("node", "s"), "left")
-        .select(col("node").as("dst"), col("s"),
-          col("sigma").as("v_sigma"),
-          coalesce(col("dm"), lit(0L)).as("v_dm"))
-      val uRows = frames(r - 1)
-        .select(col("node").as("src"), col("s"), col("sigma").as("u_sigma"))
-      val contrib = edges
-        .join(vRows, Seq("dst"))
-        .join(uRows, Seq("src", "s"))
-        .select(col("src").as("node"), col("s"),
-          expr("(u_sigma * (1000000L + v_dm)) div v_sigma").as("dm"))
-        .groupBy("node", "s").agg(sum("dm").as("dm"))
-        .localCheckpoint()
-      deltaFrames ::= contrib
-      deltaAt = contrib
-    }
-    // every forward level and both edge copies are consumed once the
-    // (eager) delta checkpoints exist — free them in one batch at the
-    // end of construction: per-round frees measured a diffuse ~1 s
-    // slowdown across the backward jobs (r15 A/B), the batch form
-    // keeps the cross-invocation leak fix without touching the loop
-    org.apache.spark.sql.graft.CheckpointIds.free(frames :+ edges: _*)
-    deltaFrames.reduce(_ unionByName _)
-      .filter(col("node") =!= col("s"))
-      .groupBy("node")
-      .agg(sum("dm").as("betweenness_micro"))
-      .orderBy(col("betweenness_micro").desc, col("node"))
-      .limit(topK)
-  }
 
   /** G12: HyperBall neighborhood-function sketches — G11's sketch
     * sibling (VERDICT r9 "Next round" #4). Every node carries an HLL
@@ -1268,111 +1201,89 @@ object Graph {
   private[graft] def hyperballNodes(spark: SparkSession, pairs: DataFrame,
                                     iters: Int, b: Int): DataFrame = {
     import org.apache.spark.sql.graft.{ColumnShim, GraftHllSketch, HllBallMicro}
-    val edges = pairs
-      .unionByName(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
-    val regMax = udaf(graft.functions.Aggregators.RegisterMaxBytes)
-    // init: each node's sketch holds exactly itself (byte-packed —
-    // register idx = low b bits of xxhash64, value ρ = 1 + trailing
-    // zeros of the remaining bits; GraftHllSketch.init replicates the
-    // engine's own xxhash64 seed-42 exactly). One typed map over V
-    // rows, once — the hot path below never touches a lambda.
-    val spark2 = spark
-    import spark2.implicits._
-    val bb = b
-    var state = edges.select(col("src").as("node")).distinct().as[Long]
-      .map(n => (n, GraftHllSketch.init(n, bb)))
-      .toDF("node", "regs")
-      .localCheckpoint()
-    // HLL estimate via the codegen'd native readout, micro-floored
-    // per node BEFORE any cross-node sum (partition-order-proof)
-    def estMicro(regs: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      ColumnShim.column(HllBallMicro(ColumnShim.expression(regs), bb))
-    var perRound = Seq(state.select(col("node"), lit(0).as("r"),
-      estMicro(col("regs")).as("ball_micro")))
-    var r = 1
-    var converged = false
-    while (r <= iters && !converged) {
-      val contrib = edges
-        .join(state.select(col("node").as("src"), col("regs")), "src")
-        .select(col("dst").as("node"), col("regs"))
-      // CONVERGENCE early-exit: registers only grow, so an unchanged
-      // round means every later round is identical — stop paying the
-      // edge join and replicate the final estimates for the remaining
-      // radii. The prev-vs-next compare rides INSIDE the round's own
-      // checkpoint (one extra node-sized join in the same action, r14)
-      // so the convergence readout is a cheap scan of materialized
-      // rows, not a separate join job per round.
-      val next = state.unionByName(contrib)
-        .groupBy("node").agg(regMax(col("regs")).as("regs"))
-        .join(state.select(col("node"), col("regs").as("prev_regs")),
-          Seq("node"), "left")
-        // null-safe compare (advice r14): state is initialized over the
-        // symmetric edge union so prev_regs can never be null today, but
-        // a plain =!= would read a null as "unchanged" and silently
-        // converge early if an init change ever violated that
-        .select(col("node"), col("regs"),
-          not(col("regs") <=> col("prev_regs")).as("chg"))
-        .localCheckpoint()
-      converged = next.filter(col("chg")).limit(1).count() == 0L
-      state = next.select("node", "regs")
-      perRound = perRound :+ state.select(col("node"), lit(r).as("r"),
-        estMicro(col("regs")).as("ball_micro"))
-      r += 1
+    CheckpointIds.scoped(spark) { cp =>
+      val edges = cp(undirected(pairs))
+      val regMax = udaf(graft.functions.Aggregators.RegisterMaxBytes)
+      // init: each node's sketch holds exactly itself (byte-packed —
+      // register idx = low b bits of xxhash64, value ρ = 1 + trailing
+      // zeros of the remaining bits; GraftHllSketch.init replicates the
+      // engine's own xxhash64 seed-42 exactly). One typed map over V
+      // rows, once — the hot path below never touches a lambda.
+      val spark2 = spark
+      import spark2.implicits._
+      val bb = b
+      val state0 = cp(edges.select(col("src").as("node")).distinct().as[Long]
+        .map(n => (n, GraftHllSketch.init(n, bb)))
+        .toDF("node", "regs"))
+      // HLL estimate via the codegen'd native readout, micro-floored
+      // per node BEFORE any cross-node sum (partition-order-proof)
+      def readout(state: DataFrame, r: Int): DataFrame =
+        state.select(col("node"), lit(r).as("r"),
+          ColumnShim.column(HllBallMicro(ColumnShim.expression(col("regs")), bb)).as("ball_micro"))
+      // State: (registers, per-radius readouts, converged).
+      val ((state, perRound, _), rounds) =
+        cp.iterate((state0, Vector(readout(state0, 0)), false), iters) {
+          case (state, perRound, _) =>
+            val contrib = edges
+              .join(state.select(col("node").as("src"), col("regs")), "src")
+              .select(col("dst").as("node"), col("regs"))
+            // CONVERGENCE early-exit: registers only grow, so an unchanged
+            // round means every later round is identical — stop paying the
+            // edge join and replicate the final estimates for the remaining
+            // radii. The prev-vs-next compare rides INSIDE the round's own
+            // checkpoint (one extra node-sized join in the same action, r14)
+            // so the convergence readout is a cheap scan of materialized
+            // rows, not a separate join job per round.
+            val next = cp(state.unionByName(contrib)
+              .groupBy("node").agg(regMax(col("regs")).as("regs"))
+              .join(state.select(col("node"), col("regs").as("prev_regs")),
+                Seq("node"), "left")
+              // null-safe compare (advice r14): state is initialized over the
+              // symmetric edge union so prev_regs can never be null today, but
+              // a plain =!= would read a null as "unchanged" and silently
+              // converge early if an init change ever violated that
+              .select(col("node"), col("regs"),
+                not(col("regs") <=> col("prev_regs")).as("chg")))
+            val converged = next.filter(col("chg")).limit(1).count() == 0L
+            val regs = next.select("node", "regs")
+            (regs, perRound :+ readout(regs, perRound.length), converged)
+        }(_._3)
+      (perRound ++ (rounds + 1 to iters).map(readout(state, _))).reduce(_ unionByName _)
     }
-    while (r <= iters) {
-      perRound = perRound :+ state.select(col("node"), lit(r).as("r"),
-        estMicro(col("regs")).as("ball_micro"))
-      r += 1
-    }
-    // per-round register states back the readout and must stay; the
-    // edge frame is dead once the last round's state materializes
-    org.apache.spark.sql.graft.CheckpointIds.free(edges)
-    perRound.reduce(_ unionByName _)
   }
 
   /** [[closeness]]'s core over ANY undirected pair set. */
   private[graft] def closenessOf(pairs: DataFrame, iters: Int,
-                                 nLandmarks: Int, topK: Int): DataFrame = {
-    val edges = pairs
-      .unionByName(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
-    val landmarks = edges.select(col("src").as("node")).distinct()
-      .orderBy("node").limit(nLandmarks)
-    // Frontier BFS (r14): unweighted first arrival IS the min
-    // distance, so each round relaxes only the nodes REACHED last
-    // round and appends the newly-discovered (node, lm) pairs — where
-    // the previous shape re-aggregated and re-checkpointed the whole
-    // accumulated dist table every round. The accumulated state is a
-    // union of already-materialized per-round frames (free to read),
-    // and the per-round join/agg volume shrinks with the frontier.
-    var frontier = landmarks
-      .select(col("node"), col("node").as("lm"), lit(0L).as("dist"))
-      .localCheckpoint()
-    var distFrames = List(frontier)
-    for (_ <- 1 to iters) {
-      // the last two levels suffice as the anti-join build side — the
-      // same distance-±1 argument as the betweenness forward pass
-      // (distFrames is most-recent-first)
-      val seen = distFrames.take(2).reduce(_ unionByName _)
-      val relax = edges
-        .join(frontier.select(col("node").as("src"), col("lm"), col("dist")), "src")
-        .groupBy(col("dst").as("node"), col("lm"))
-        .agg(min(col("dist") + 1L).as("dist"))
-      frontier = relax
-        .join(seen.select("node", "lm"), Seq("node", "lm"), "left_anti")
-        .localCheckpoint()
-      distFrames ::= frontier
+                                 nLandmarks: Int, topK: Int): DataFrame =
+    CheckpointIds.scoped(pairs.sparkSession) { cp =>
+      val edges = cp(undirected(pairs))
+      val landmarks = edges.select(col("src").as("node")).distinct()
+        .orderBy("node").limit(nLandmarks)
+      // Frontier BFS (r14): unweighted first arrival IS the min
+      // distance, so each round relaxes only the nodes REACHED last
+      // round and appends the newly-discovered (node, lm) pairs — where
+      // the previous shape re-aggregated and re-checkpointed the whole
+      // accumulated dist table every round. The accumulated state is a
+      // union of already-materialized per-round frames (free to read),
+      // and the per-round join/agg volume shrinks with the frontier.
+      // State: the per-level frames, most recent (the frontier) first.
+      val init = List(cp(landmarks.select(col("node"), col("node").as("lm"), lit(0L).as("dist"))))
+      val (distFrames, _) = cp.iterate(init, iters) { distFrames =>
+        // the last two levels suffice as the anti-join build side — the
+        // same distance-±1 argument as the betweenness forward pass
+        val seen = distFrames.take(2).reduce(_ unionByName _)
+        val relax = edges
+          .join(distFrames.head.select(col("node").as("src"), col("lm"), col("dist")), "src")
+          .groupBy(col("dst").as("node"), col("lm"))
+          .agg(min(col("dist") + 1L).as("dist"))
+        cp(relax.join(seen.select("node", "lm"), Seq("node", "lm"), "left_anti")) :: distFrames
+      }(_ => false)
+      val dist = distFrames.reduce(_ unionByName _)
+      dist.filter(col("dist") > 0) // a landmark's distance to itself carries no signal
+        .withColumn("h", expr("1000000L div dist"))
+        .groupBy("node")
+        .agg(count(lit(1)).as("n_landmarks"), sum("h").as("harmonic_micro"))
+        .orderBy(col("harmonic_micro").desc, col("node"))
+        .limit(topK)
     }
-    // the per-level frames ARE the result (the readout unions them) —
-    // only the edge frame is dead once the last level materializes
-    org.apache.spark.sql.graft.CheckpointIds.free(edges)
-    val dist = distFrames.reduce(_ unionByName _)
-    dist.filter(col("dist") > 0) // a landmark's distance to itself carries no signal
-      .withColumn("h", expr("1000000L div dist"))
-      .groupBy("node")
-      .agg(count(lit(1)).as("n_landmarks"), sum("h").as("harmonic_micro"))
-      .orderBy(col("harmonic_micro").desc, col("node"))
-      .limit(topK)
-  }
 }

@@ -4,7 +4,7 @@ import graft.Tables
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{ColumnShim, HyperplaneCodes}
+import org.apache.spark.sql.graft.{CheckpointIds, ColumnShim, HyperplaneCodes}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2 A1–A3).
@@ -602,11 +602,11 @@ object Similarity {
     // depth; the first r15 shape shared the scan but still re-ran the
     // probe-explode join + distinct per depth (measured: 4 loop
     // rounds × ~1.3 s at sf0.1 — the operator's dominant slice).
-    val pool = lshPoolBuckets(spark, dir, nTables, seed).localCheckpoint()
-    val profile = pairDepthProfile(pool, bits, probe).localCheckpoint()
-    // the profile materialized (eager checkpoint) — the pool backs
-    // nothing downstream and is dead
-    org.apache.spark.sql.graft.CheckpointIds.free(pool)
+    // the pool is freed as the scope exits: nothing reads it once the
+    // profile has materialized
+    val profile = CheckpointIds.scoped(spark) { cp =>
+      cp(pairDepthProfile(cp(lshPoolBuckets(spark, dir, nTables, seed)), bits, probe))
+    }
     // DISTINCT pairs — the quantity the verify stage actually pays
     // for and the spec reports; the profile aggregate is per directed
     // pair, so a filtered count IS the depth's distinct-pair count
@@ -1057,23 +1057,26 @@ object Similarity {
     // seed: the lowest vec_id (deterministic, mirroring kmeans/PQ seeds)
     val seedRow = e.orderBy("vec_id").limit(1)
       .select(col("vec_id"), col("embedding")).head
-    var chosen = List((1, seedRow.getLong(0), 0L))
-    var center = seedRow.getAs[scala.collection.Seq[Float]]("embedding").toSeq
-    var state = e.withColumn("min_dist", distTo(center)).localCheckpoint()
-    for (r <- 2 to k) {
-      // the embedding rides the argmax struct (third field — never
-      // reached by the (min_dist, -vec_id) total order), so the
-      // center lookup needs no second job per round
-      val far = state
-        .agg(max(struct(col("min_dist"), (-col("vec_id")).as("nid"),
-          col("embedding").as("emb"))).as("m"))
-        .select(col("m.min_dist"), (-col("m.nid")).as("vec_id"), col("m.emb")).head
-      val (radius, cid) = (far.getLong(0), far.getLong(1))
-      chosen ::= ((r, cid, radius))
-      center = far.getAs[scala.collection.Seq[Float]](2).toSeq
-      state = state
-        .withColumn("min_dist", least(col("min_dist"), distTo(center)))
-        .localCheckpoint()
+    val seedCenter = seedRow.getAs[scala.collection.Seq[Float]]("embedding").toSeq
+    // the result is driver-side rows: it reads none of the round
+    // checkpoints, so the scope frees all of them on exit
+    val chosen = CheckpointIds.scoped(spark) { cp =>
+      // State: (vectors with distance to the nearest center, centers
+      // chosen so far, latest first).
+      val init = (cp(e.withColumn("min_dist", distTo(seedCenter))),
+        List((1, seedRow.getLong(0), 0L)))
+      cp.iterate(init, k - 1) { case (state, chosen) =>
+        // the embedding rides the argmax struct (third field — never
+        // reached by the (min_dist, -vec_id) total order), so the
+        // center lookup needs no second job per round
+        val far = state
+          .agg(max(struct(col("min_dist"), (-col("vec_id")).as("nid"),
+            col("embedding").as("emb"))).as("m"))
+          .select(col("m.min_dist"), (-col("m.nid")).as("vec_id"), col("m.emb")).head
+        val center = far.getAs[scala.collection.Seq[Float]](2).toSeq
+        (cp(state.withColumn("min_dist", least(col("min_dist"), distTo(center)))),
+          (chosen.length + 1, far.getLong(1), far.getLong(0)) :: chosen)
+      }(_ => false)._1._2
     }
     chosen.reverse.toDF("rank", "center_id", "radius_micro").orderBy("rank")
   }

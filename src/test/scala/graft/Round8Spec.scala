@@ -77,7 +77,8 @@ class Round8Spec extends SparkSpec {
   test("cluster labels converge in O(log n) rounds on a diameter-64 chain") {
     import spark.implicits._
     val chain = (0L until 64L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val (labels, rounds) = Dedup.clusterLabelsWithRounds(chain)
+    val (labels, rounds) =
+      org.apache.spark.sql.graft.CheckpointIds.scoped(spark)(Dedup.clusterLabelsIn(_, chain))
     val ls = labels.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(ls.length == 65)
     assert(ls.forall(_._2 == 0L),
