@@ -16,7 +16,18 @@ import org.apache.spark.sql.SparkSession
   *     (region/nation/supplier, LSH centroid sets, language-marker
   *     tables) stay map-side at any SF, while array-heavy corpus
   *     tables never qualify (see the inline note on the config);
-  *   - 256 MiB parquet split size keeps task counts sane on wide scans.
+  *   - 256 MiB parquet split size keeps task counts sane on wide scans;
+  *   - compiled codegen classes outlive the call that compiled them, so
+  *     a pipeline run again in the same JVM reuses them. Spark keeps
+  *     them in one JVM-wide LRU cache of 100 entries. One pass of the
+  *     LLM corpus flow, the LSH kNN join and PageRank needs 194–200
+  *     classes, replayed in the same order every pass, so at 100 the
+  *     LRU evicted each class just before it was needed again and every
+  *     pass recompiled ~190 of them; the reference ETL flow (sources,
+  *     sinks, SQL) needs 82 and already fit. Here the cache holds 1000,
+  *     and class names leave out the codegen stage id, which AQE
+  *     assigns in planning order: the same stage planned under another
+  *     id reuses its class, and the corpus pass needs 166.
   */
 object GraftSession {
   def builder(
@@ -49,6 +60,12 @@ object GraftSession {
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
       .config("spark.ui.enabled", "false")
+      // static: sized once per JVM, from the session that compiles
+      // first. 1000 holds several pipelines of the working sets above
+      // (166 and 78 classes per pass with these settings). A cached
+      // class retains ~23 KB of heap, so a full cache is ~23 MB.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   def getOrCreate(): SparkSession = {
     val s = builder().getOrCreate()

@@ -17,6 +17,35 @@ object Tables {
 
   def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
+  /** A table's snapshot: its qualified path, the total length of its
+    * files and their latest modification time, read through Hadoop's
+    * `FileSystem` (`java.io.File.lastModified` reads 0 on HDFS and
+    * object stores). Every per-dataset memo keys on it, so a table
+    * rewritten in place in the same JVM misses the memo.
+    */
+  def snapshot(spark: SparkSession, dir: String, name: String): (String, Long, Long) = {
+    val p = new org.apache.hadoop.fs.Path(path(dir, name))
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.listFiles(p, true)
+    var (length, modified) = (0L, 0L)
+    while (files.hasNext) {
+      val f = files.next()
+      length += f.getLen
+      modified = math.max(modified, f.getModificationTime)
+    }
+    (fs.makeQualified(p).toString, length, modified)
+  }
+
+  private val rowsMemo = scala.collection.concurrent.TrieMap.empty[(String, Long, Long), Long]
+
+  /** A table's row count, memoized per [[snapshot]]: a dataset property
+    * that operators consult for sizing decisions (broadcast or shuffle,
+    * block and bucket sizes), never a result. Without the memo each
+    * plan construction pays a count job on a static dataset.
+    */
+  def rows(spark: SparkSession, dir: String, name: String): Long =
+    rowsMemo.getOrElseUpdate(snapshot(spark, dir, name), load(spark, dir, name).count())
+
   /** `events.ts` has shipped in three on-disk encodings across
     * testdata generations: parquet TIMESTAMP(NANOS) — which Spark's
     * TimestampType (micros) cannot hold, so the session reads it as a

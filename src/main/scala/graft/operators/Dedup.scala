@@ -28,12 +28,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   */
 object Dedup {
 
-  // the previous minhashLsh invocation's candidate-frame checkpoint ids,
-  // per application — freed when the next invocation supersedes it (see
-  // the note at the localCheckpoint site)
-  private val lastMinhashCand =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Int]]()
-
   /** D1: exact dedup on the md5 of normalized text. One shuffle on the
     * 128-bit hash; survivors = min doc_id per group (deterministic).
     */
@@ -277,7 +271,7 @@ object Dedup {
     // stats is one row per document — broadcast only when the corpus
     // is provably broadcast-sized (the G15 keepAlive guard pattern);
     // a 100 TB corpus degrades to a shuffle join, never a driver OOM
-    val statsB = if (documentsRows(spark, dir) <= 2_000_000L)
+    val statsB = if (Tables.rows(spark, dir, "documents") <= 2_000_000L)
       broadcast(stats) else stats
     val surv = counted
       .join(statsB.select(col("doc_id").as("inner_id"),
@@ -354,18 +348,6 @@ object Dedup {
     (sets, idx)
   }
 
-  /** Documents-table row count, memoized per (dir, mtime) like
-    * [[graft.operators.Similarity]]'s embeddingRows — a dataset
-    * property consulted for broadcast-vs-shuffle sizing decisions, not
-    * a result cache (results never depend on it).
-    */
-  private val docsRowsCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Long]
-  private def documentsRows(spark: SparkSession, dir: String): Long =
-    docsRowsCache.getOrElseUpdate(
-      (dir, new java.io.File(Tables.path(dir, "documents")).lastModified()),
-      Tables.load(spark, dir, "documents").count())
-
   /** MinHash signature: native codegen'd expression
     * ([[org.apache.spark.sql.graft.MinHashSignature]]) — the whole
     * normalize → tokenize → shingle → k-min pipeline in one compiled
@@ -408,23 +390,18 @@ object Dedup {
     // candidate-id semi-filter below — unmaterialized, the band
     // self-join + distinct re-ran three times per query (r14; only the
     // signature exchange below it is deduped by AQE reuse)
-    val cand = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-      .localCheckpoint()
-    // free the PREVIOUS invocation's candidate frame (advice r14): the
-    // eager checkpoint above otherwise accumulates one pair-sized block
-    // set per invocation in a long-lived JVM — the same pathology
-    // CheckpointIds.scoped exists for. Invocations construct-then-consume
+    // Only the latest invocation's candidate frame is held: each call's
+    // eager checkpoint would otherwise add one pair-sized block set per
+    // invocation in a long-lived JVM. Invocations construct-then-consume
     // sequentially (Verify/Bench both materialize each query before
     // building the next), so the superseded frame has no live reader.
-    val prevCand = lastMinhashCand.put(spark.sparkContext.applicationId,
-      org.apache.spark.sql.graft.CheckpointIds.of(cand))
-    if (prevCand != null)
-      org.apache.spark.sql.graft.CheckpointIds.freeIds(
-        spark.sparkContext, prevCand)
+    val cand = CheckpointIds.latest(spark, "minhashLsh.cand") {
+      banded.as("x").join(banded.as("y"),
+          col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
+            col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+        .distinct()
+    }
     // exact verify on candidates only: semi-join first so the string
     // shingle sets are computed for candidate docs alone, not the corpus
     val candIds = cand.select(col("doc_a").as("doc_id"))

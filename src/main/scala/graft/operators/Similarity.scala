@@ -41,33 +41,15 @@ object Similarity {
     * over a limit-1 scan) — never assumed. A dim mismatch between the
     * hyperplanes and the vectors would silently truncate the
     * dot products and degrade recall with no error. Memoized per
-    * table dir: the dim is a property of the dataset, and the probe
-    * job is pure fixed overhead on every re-run otherwise.
+    * table snapshot ([[graft.Tables.snapshot]]): the dim is a property
+    * of the dataset, and the probe job is pure fixed overhead on every
+    * re-run otherwise.
     */
-  /** Memo key for per-dataset probes: (dir, snapshot). The snapshot is
-    * the table path's last-modified time — if the dataset at `dir` is
-    * rewritten in the same JVM, the mtime changes and the memo misses,
-    * so [[knnJoin]] can never size its broadcast blocks from a stale
-    * count (a silent ≫32 MB block with no error otherwise).
-    */
-  private def snapshotKey(dir: String): (String, Long) =
-    (dir, new java.io.File(Tables.path(dir, "embeddings")).lastModified())
-
-  private val dimCache = new scala.collection.concurrent.TrieMap[(String, Long), Int]
+  private val dimCache = new scala.collection.concurrent.TrieMap[(String, Long, Long), Int]
   private[operators] def embeddingDim(spark: SparkSession, dir: String): Int =
-    dimCache.getOrElseUpdate(snapshotKey(dir),
+    dimCache.getOrElseUpdate(Tables.snapshot(spark, dir, "embeddings"),
       Tables.load(spark, dir, "embeddings")
         .select(size(col("embedding")).as("d")).limit(1).head.getInt(0))
-
-  /** Corpus row count, memoized per table dir like [[embeddingDim]] —
-    * [[knnJoin]] needs it to size its broadcast blocks, and paying a
-    * count job per plan CONSTRUCTION (Round4Spec builds the plan three
-    * times) is pure fixed overhead on a static dataset.
-    */
-  private val rowsCache = new scala.collection.concurrent.TrieMap[(String, Long), Long]
-  private[operators] def embeddingRows(spark: SparkSession, dir: String): Long =
-    rowsCache.getOrElseUpdate(snapshotKey(dir),
-      Tables.load(spark, dir, "embeddings").count())
 
   /** The benchmark query set: lowest `nQueries` vec_ids. */
   private def querySet(e: DataFrame, nQueries: Int): DataFrame =
@@ -291,7 +273,7 @@ object Similarity {
   def knnJoin(spark: SparkSession, dir: String, k: Int = 3,
               targetBlockBytes: Long = 32L << 20): DataFrame = {
     val nBlocks = knnBlockCount(
-      embeddingRows(spark, dir), embeddingDim(spark, dir), targetBlockBytes)
+      Tables.rows(spark, dir, "embeddings"), embeddingDim(spark, dir), targetBlockBytes)
     val e = corpus(spark, dir).select(col("vec_id").as("src"), col("embedding"))
     val topk = udaf(graft.functions.Aggregators.TopKByScore(k))
     val partials = (0 until nBlocks).map { b =>
@@ -407,7 +389,7 @@ object Similarity {
                                  nTables: Int = 16, bitsPerTable: Int = 4,
                                  seed: Long = 42L,
                                  targetOccupancy: Long = 128L): DataFrame = {
-    val bits = lshDepth(embeddingRows(spark, dir), bitsPerTable, targetOccupancy)
+    val bits = lshDepth(Tables.rows(spark, dir, "embeddings"), bitsPerTable, targetOccupancy)
     val buckets = lshBuckets(spark, dir, nTables, bits, seed)
     buckets
       .join(buckets.select(col("vec_id").as("nbr"), col("tbl"), col("code")), Seq("tbl", "code"))
@@ -588,7 +570,7 @@ object Similarity {
                               nTables: Int, seed: Long,
                               capPairsPerVec: Double,
                               probe: Int): (Int, Double, DataFrame) = {
-    val n = math.max(1L, embeddingRows(spark, dir))
+    val n = math.max(1L, Tables.rows(spark, dir, "embeddings"))
     var bits = lshDepth(n, 4, 128L)
     // ONE signature scan AND ONE bucket join for the whole sweep
     // (VERDICT r14 #1, completed r15): the pool-depth codes are
@@ -1062,19 +1044,23 @@ object Similarity {
     // checkpoints, so the scope frees all of them on exit
     val chosen = CheckpointIds.scoped(spark) { cp =>
       // State: (vectors with distance to the nearest center, centers
-      // chosen so far, latest first).
-      val init = (cp(e.withColumn("min_dist", distTo(seedCenter))),
+      // chosen so far, latest first). Only a following round reads the
+      // distances, so they are checkpointed only while one follows: the
+      // last state stays lazy and never runs.
+      def state(dist: DataFrame, chosen: List[(Int, Long, Long)]) =
+        (if (chosen.length < k) cp(dist) else dist, chosen)
+      val init = state(e.withColumn("min_dist", distTo(seedCenter)),
         List((1, seedRow.getLong(0), 0L)))
-      cp.iterate(init, k - 1) { case (state, chosen) =>
+      cp.iterate(init, k - 1) { case (dist, chosen) =>
         // the embedding rides the argmax struct (third field — never
         // reached by the (min_dist, -vec_id) total order), so the
         // center lookup needs no second job per round
-        val far = state
+        val far = dist
           .agg(max(struct(col("min_dist"), (-col("vec_id")).as("nid"),
             col("embedding").as("emb"))).as("m"))
           .select(col("m.min_dist"), (-col("m.nid")).as("vec_id"), col("m.emb")).head
         val center = far.getAs[scala.collection.Seq[Float]](2).toSeq
-        (cp(state.withColumn("min_dist", least(col("min_dist"), distTo(center)))),
+        state(dist.withColumn("min_dist", least(col("min_dist"), distTo(center))),
           (chosen.length + 1, far.getLong(1), far.getLong(0)) :: chosen)
       }(_ => false)._1._2
     }

@@ -22,7 +22,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * these ids are the ones `localCheckpoint` persisted.
   *
   * Iterative operators take their checkpoints through [[scoped]], the
-  * one owner of a loop's checkpoint lifetimes.
+  * one owner of a loop's checkpoint lifetimes; a per-call checkpoint
+  * outside a loop takes [[latest]].
   */
 object CheckpointIds {
   def of(frames: Dataset[_]*): Seq[Int] =
@@ -117,12 +118,26 @@ object CheckpointIds {
     of(frames(x).toSeq: _*).toSet
   }
 
-  /** Non-blocking unpersist by raw RDD id, for a cache that recorded
-    * its frame's ids (via [[of]]) and drops them when it is replaced.
-    * The blocks are unrecoverable (see [[Scope]]): free only ids whose
-    * frames no live plan reads.
+  // the checkpoint ids [[latest]] holds, per (application, key)
+  private val held = new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[Int]]()
+
+  /** Eager `localCheckpoint` of `ds`, held as the latest under `key`
+    * in this application: the next call with the same key frees it.
+    * For an operator that checkpoints per call outside any loop, so
+    * that a long-lived JVM keeps one call's blocks, not one per call.
+    * The blocks are unrecoverable (see [[Scope]]): the caller must
+    * materialize what reads the frame before the next call with the
+    * key replaces it.
     */
-  def freeIds(sc: SparkContext, ids: Seq[Int]): Unit = {
+  def latest[T](spark: SparkSession, key: String)(ds: Dataset[T]): Dataset[T] = {
+    val c = ds.localCheckpoint()
+    val sc = spark.sparkContext
+    Option(held.put((sc.applicationId, key), of(c))).foreach(freeIds(sc, _))
+    c
+  }
+
+  /** Non-blocking unpersist by raw RDD id. */
+  private def freeIds(sc: SparkContext, ids: Seq[Int]): Unit = {
     val persisted = sc.getPersistentRDDs
     ids.foreach(id => persisted.get(id).foreach(_.unpersist(blocking = false)))
   }

@@ -114,4 +114,32 @@ class CheckpointScopeSpec extends SparkSpec {
     val leaked = persisted() -- before
     assert(leaked.isEmpty, s"checkpoints $leaked outlive the failed scope")
   }
+
+  test("latest holds one checkpoint per key and frees the one it replaces") {
+    val before = persisted()
+    val first = CheckpointIds.latest(spark, "spec.latest")(pairs)
+    val other = CheckpointIds.latest(spark, "spec.other")(pairs)
+    val second = CheckpointIds.latest(spark, "spec.latest")(pairs.filter(col("src") > 2L))
+    assert(CheckpointIds.of(first).nonEmpty)
+    assert(persisted() -- before == CheckpointIds.of(second, other).toSet,
+      "the second call under a key frees the first; other keys keep theirs")
+    assert(second.count() == 5L && other.count() == 8L)
+  }
+
+  test("embCoreset checkpoints its distances only while another round reads them") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Similarity.embCoreset(spark, sfDir, k = 4).collect()
+      org.apache.spark.graft.TestListenerBus.drain(spark.sparkContext)
+      // k = 4 runs 3 rounds and 3 checkpoints: the seed's distances and
+      // rounds 1–2's. Checkpointing round 3's distances too, which
+      // nothing reads, took 17 jobs.
+      assert(jobs.get() == 16, s"embCoreset(k = 4) ran ${jobs.get()} jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
