@@ -1015,15 +1015,14 @@ object Dedup {
     }
     // Each step is checkpointed (an unmaterialized inner step would
     // re-execute its join+aggregate for both of the next step's
-    // references to it); chg is carried through the checkpoint so the
-    // convergence count scans materialized rows, never a
-    // labels-vs-labels join. Both steps only ever LOWER labels, so a
-    // round with neither step changing anything is a fixpoint of
-    // neighbor-min — labels are componentwise-constant minima.
-    // State: (labels, rows the round changed).
+    // references to it); the checkpoint's own job counts the rows with
+    // chg set, so convergence costs no job of its own. Both steps only
+    // ever LOWER labels, so a round with neither step changing anything
+    // is a fixpoint of neighbor-min — labels are componentwise-constant
+    // minima. State: (labels, rows the round changed).
     val ((labels, _), rounds) = cp.iterate((init, 1L), Int.MaxValue) { case (labels, _) =>
-      val next = cp(shortcut(cp(propagate(labels))))
-      (next.select("id", "lbl"), next.filter(col("chg")).count())
+      val (next, changed) = cp.counting(shortcut(cp(propagate(labels))), "chg")
+      (next.select("id", "lbl"), changed)
     }(_._2 == 0L)
     (labels, rounds)
   }

@@ -71,11 +71,13 @@ object Graph {
     * then symmetrized) and `localCheckpoint`ed with its degree column
     * riding along, so each of the `iters` rounds is exactly one
     * edges⋈ranks equi-join (ranks is nodes-sized, the small side at
-    * any SF — AQE broadcasts it) plus one map-side-combined sum
-    * shuffled on dst. Per-round traffic is O(|edges|) longs, rounds
-    * are checkpointed so plans stay constant-size — the D8 iterative
-    * pattern. Dangling nodes cannot exist (symmetrized edges give
-    * every node out-degree ≥ 1).
+    * any SF; its checkpoint states its size, so the plan broadcasts it
+    * and never shuffles the edges) plus one map-side-combined sum
+    * shuffled on dst. Round 1 reads the edges alone: r₀ is uniform.
+    * Per-round traffic is O(|edges|) longs, rounds are checkpointed so
+    * plans stay constant-size — the D8 iterative pattern. Dangling
+    * nodes cannot exist (symmetrized edges give every node out-degree
+    * ≥ 1).
     */
   def pageRank(spark: SparkSession, dir: String,
                iters: Int = 5, topK: Int = 20): DataFrame = {
@@ -92,21 +94,34 @@ object Graph {
     CheckpointIds.scoped(pairs.sparkSession) { cp =>
       val edges = undirected(pairs)
       val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-      val init = cp(deg.select(col("src").as("node"), lit(1000000L).as("r")))
-      val withDeg = cp(edges.join(deg, "src"))
-      val (ranks, _) = cp.iterate(init, iters) { ranks =>
-        cp(withDeg
-          .join(ranks.withColumnRenamed("node", "src"), "src")
-          .select(col("dst"), expr("r div d").as("c"))
-          .groupBy("dst").agg(sum("c").as("s"))
-          .select(col("dst").as("node"),
-            expr("150000L + (85L * s) div 100L").as("r")))
-      }(_ => false)
+      val ranks =
+        if (iters == 0) deg.select(col("src").as("node"), lit(1000000L).as("r"))
+        else {
+          val withDeg = cp(edges.join(deg, "src"))
+          // r₀ is 1e6 at every node, so round 1 reads no rank frame:
+          // each edge carries `1000000 div d`
+          val first = cp(rankSum(withDeg.select(col("dst"), expr("1000000L div d").as("c"))))
+          cp.iterate(first, iters - 1)(ranks => cp(pageRankRound(withDeg, ranks)))(_ => false)._1
+        }
       ranks
         .orderBy(col("r").desc, col("node"))
         .limit(topK)
         .select(col("node"), col("r").as("rank_micro"))
     }
+
+  /** One [[pageRankOf]] round over the edges with their source's
+    * degree (`src`, `dst`, `d`) and the previous round's `ranks`
+    * (`node`, `r`).
+    */
+  private[graft] def pageRankRound(withDeg: DataFrame, ranks: DataFrame): DataFrame =
+    rankSum(withDeg
+      .join(ranks.withColumnRenamed("node", "src"), "src")
+      .select(col("dst"), expr("r div d").as("c")))
+
+  // a round's new ranks from its per-edge contributions (`dst`, `c`)
+  private def rankSum(contrib: DataFrame): DataFrame =
+    contrib.groupBy("dst").agg(sum("c").as("s"))
+      .select(col("dst").as("node"), expr("150000L + (85L * s) div 100L").as("r"))
 
   /** G4: personalized PageRank — G1's walk with the teleport
     * concentrated on a SEED COHORT (one nation's customers): "who is
@@ -363,9 +378,9 @@ object Graph {
   }
 
   /** G2/G8 shared pass — the co-ordered-parts pair graph and its
-    * oriented triangle stream, built ONCE per (application, sfDir)
-    * and localCheckpoint'ed: the two registry entries computed the
-    * identical 3-way join independently until round 7 (the judge's
+    * oriented triangle stream, built ONCE per (application, snapshot
+    * of `lineitem`) and localCheckpoint'ed: the two registry entries
+    * computed the identical 3-way join independently until round 7 (the judge's
     * top perf finding — g_clustering alone was 18% of the extended
     * bench). The stream is triangle-mass-bounded (only
     * triangle-closing base edges survive the filter), so pinning it
@@ -373,16 +388,12 @@ object Graph {
     * intermediate view" decision a production pipeline makes
     * explicitly.
     *
-    * CONTRACT: the memo key is (applicationId, dir) with NO
-    * file-listing validation — input data under `dir` is assumed
-    * immutable for the session's lifetime (true for the driver's
-    * testdata and any production snapshot/manifest-versioned read).
-    * A path whose files are rewritten mid-session would serve stale
-    * triangles; such callers must [[dropSharedCache]] after the
-    * rewrite (Bench does, for timing fairness rather than staleness).
+    * The memo key is (applicationId, `lineitem`'s [[Tables.snapshot]]),
+    * so a `lineitem` rewritten in place is read again, and building it
+    * frees the triangles of the snapshot it replaces.
     */
-  private val partsGraphCache =
-    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, DataFrame, Seq[Int])]
+  private val partsGraphCache = scala.collection.concurrent.TrieMap
+    .empty[(String, (String, Long, Long)), (DataFrame, DataFrame, Seq[Int])]
 
   /** Drop the shared G2/G8 artifacts — Bench calls this before every
     * timed run so benchmark numbers grade the full pipeline, never
@@ -404,16 +415,23 @@ object Graph {
     * the next timed run starts.
     */
   private[graft] def dropSharedCache(spark: SparkSession): Unit = {
-    // only THIS context's entries: RDD ids restart at 0 per
-    // SparkContext, so a stale entry from a stopped context would
-    // alias (and blocking-unpersist) unrelated RDDs of the new one
-    val prefix = spark.sparkContext.applicationId + "|"
-    val persisted = spark.sparkContext.getPersistentRDDs
-    partsGraphCache.foreach { case (key, (_, _, rddIds)) =>
-      if (key.startsWith(prefix))
-        rddIds.foreach(id => persisted.get(id).foreach(_.unpersist(blocking = true)))
-    }
+    dropShared(spark)(_ => true)
     partsGraphCache.clear()
+  }
+
+  // Frees and forgets the entries of THIS context whose snapshot
+  // `drop` selects: RDD ids restart at 0 per SparkContext, so a stale
+  // entry from a stopped context would alias (and blocking-unpersist)
+  // unrelated RDDs of the new one.
+  private def dropShared(spark: SparkSession)(drop: ((String, Long, Long)) => Boolean): Unit = {
+    val app = spark.sparkContext.applicationId
+    val persisted = spark.sparkContext.getPersistentRDDs
+    partsGraphCache.foreach { case (key @ (owner, snap), (_, _, rddIds)) =>
+      if (owner == app && drop(snap)) {
+        rddIds.foreach(id => persisted.get(id).foreach(_.unpersist(blocking = true)))
+        partsGraphCache.remove(key)
+      }
+    }
   }
 
   /** The checkpoint RDD ids currently held by the shared-pass memo
@@ -422,10 +440,8 @@ object Graph {
     * ContextCleaner collecting OTHER operators' orphans).
     */
   private[graft] def sharedCacheRddIds(spark: SparkSession): Seq[Int] = {
-    val prefix = spark.sparkContext.applicationId + "|"
-    partsGraphCache.collect {
-      case (key, (_, _, ids)) if key.startsWith(prefix) => ids
-    }.flatten.toSeq
+    val app = spark.sparkContext.applicationId
+    partsGraphCache.collect { case ((`app`, _), (_, _, ids)) => ids }.flatten.toSeq
   }
 
   /** G15: k-truss decomposition by synchronous edge peeling over the
@@ -619,8 +635,11 @@ object Graph {
   }
 
   private def partsGraph(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val snap = Tables.snapshot(spark, dir, "lineitem")
     val (pp, stream, _) =
-      partsGraphCache.getOrElseUpdate(spark.sparkContext.applicationId + "|" + dir, {
+      partsGraphCache.getOrElseUpdate((spark.sparkContext.applicationId, snap), {
+        // an earlier snapshot of the same table is stale
+        dropShared(spark)(_._1 == snap._1)
         // spread the few-split parquet scan before the self-join: the
         // broadcast-join probe, pair generation and partial distinct
         // otherwise all run at the scan's task count (3 tasks at

@@ -137,8 +137,9 @@ class CheckpointScopeSpec extends SparkSpec {
       Similarity.embCoreset(spark, sfDir, k = 4).collect()
       org.apache.spark.graft.TestListenerBus.drain(spark.sparkContext)
       // k = 4 runs 3 rounds and 3 checkpoints: the seed's distances and
-      // rounds 1–2's. Checkpointing round 3's distances too, which
-      // nothing reads, took 17 jobs.
+      // rounds 1–2's, each materialized by the one job that measures
+      // its size. Checkpointing round 3's distances too, which nothing
+      // reads, took 17 jobs.
       assert(jobs.get() == 16, s"embCoreset(k = 4) ran ${jobs.get()} jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
