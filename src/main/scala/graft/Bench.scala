@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParquetRead
 
 /** Benchmark main — one JSON line on stdout, per the driver contract.
   *
@@ -169,7 +170,7 @@ object Bench {
     val marker = new java.io.File(s"$out/_DONE")
     if (!marker.exists()) {
       val reps = spark.range(factor).select(col("id").cast("int").as("rep"))
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+      val docs = ParquetRead(spark, s"$sfDir/documents.parquet")
       val nDocs = docs.agg(max("doc_id")).head.getLong(0) + 1
       docs.crossJoin(broadcast(reps))
         .select(
@@ -180,7 +181,7 @@ object Bench {
             .as("text"),
           col("lang"), col("source"), col("n_chars"))
         .write.mode("overwrite").parquet(s"$out/documents.parquet")
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val emb = ParquetRead(spark, s"$sfDir/embeddings.parquet")
       val nVecs = emb.agg(max("vec_id")).head.getLong(0) + 1
       val d = size(col("embedding"))
       emb.crossJoin(broadcast(reps))
@@ -197,8 +198,8 @@ object Bench {
       // (the same constant-density regime the document blow-up holds).
       // o_orderkey/l_orderkey share one offset so the join keys still
       // line up within each replica.
-      val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      val orders = ParquetRead(spark, s"$sfDir/orders.parquet")
+      val li = ParquetRead(spark, s"$sfDir/lineitem.parquet")
       val oMax = orders.agg(max("o_orderkey").cast("long"),
         max("o_custkey").cast("long")).head
       val (maxO, maxC) = (oMax.getLong(0) + 1, oMax.getLong(1) + 1)
@@ -219,7 +220,7 @@ object Bench {
       // part replicates under the SAME l_partkey offset so lineitem's
       // foreign keys stay resolvable within each replica (t_neg_sample
       // probes the contiguous part-key space modulo |part|)
-      spark.read.parquet(s"$sfDir/part.parquet")
+      ParquetRead(spark, s"$sfDir/part.parquet")
         .crossJoin(broadcast(reps))
         .withColumn("p_partkey", col("p_partkey") + col("rep") * maxP)
         .drop("rep")

@@ -2,6 +2,7 @@ package graft
 
 import graft.streaming.StreamStage
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParquetRead
 
 /** Scratch profiler for the s_join_interval streaming outlier
   * (VERDICT r8 "Next round" #6): replays the StreamBench feed and
@@ -26,8 +27,8 @@ object ProfileJoinInterval {
       .withColumn("event_id", col("event_id") + col("rep") * maxId)
       .drop("rep")
     StreamStage.stageTimeOrdered(replicated, "ts", feed, 16)
-    val schema = spark.read.parquet(feed).schema
-    println(s"feed rows=${spark.read.parquet(feed).count()}")
+    val schema = ParquetRead(spark, feed).schema
+    println(s"feed rows=${ParquetRead(spark, feed).count()}")
 
     def run(tag: String, filesPerTrigger: Int, stateParts: Int,
             providerRocks: Boolean = false): Unit = {

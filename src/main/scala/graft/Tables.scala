@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.graft.ParquetRead
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
@@ -60,7 +61,7 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr, timestamp_micros, unix_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val df = spark.read.parquet(path(dir, name))
+    val df = ParquetRead(spark, path(dir, name))
     if (name != "events") df
     else df.schema("ts").dataType match {
       case LongType =>

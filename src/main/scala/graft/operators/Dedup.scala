@@ -5,7 +5,7 @@ import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{CheckpointIds, ColumnShim, HyperplaneCodes, MinHashSignature, ShingleHashes, SimHash64}
+import org.apache.spark.sql.graft.{CheckpointIds, ColumnShim, HyperplaneCodes, MinHashSignature, ParquetRead, ShingleHashes, SimHash64}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Corpus deduplication (SURVEY.md §2 D1–D5) — the first pass of any
@@ -69,7 +69,7 @@ object Dedup {
           concat(lit("DUP_"), expr("doc_id div 9") % 3))
           .otherwise(col("text")).as("text"))
       .repartition(8).write.mode("overwrite").parquet(lake)
-    val rows = spark.read.parquet(lake)
+    val rows = ParquetRead(spark, lake)
       .select(col("doc_id"), col("text"), md5(col("text")).as("h"),
         col("_metadata.file_name").as("file"),
         col("_metadata.row_index").as("row_index"))

@@ -615,23 +615,18 @@ object Graph {
     */
   private[graft] def ktrussFullOf(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"k-truss is defined for k >= 3 (got $k)")
-    var e = pairs.select("a", "b").localCheckpoint()
-    var prevCount = e.count()
-    var round = 1
-    var converged = false
-    while (round <= rounds && !converged) {
-      e = edgeSupport(e)
-        .filter(col("sup") >= k - 2)
-        .select("a", "b")
-        .localCheckpoint()
-      val n = e.count()
-      converged = n == prevCount
-      prevCount = n
-      round += 1
+    CheckpointIds.scoped(pairs.sparkSession) { cp =>
+      val e0 = cp(pairs.select("a", "b"))
+      // State: (edges, edge count, previous round's edge count); an
+      // unchanged count means the peel converged.
+      val ((e, _, _), _) = cp.iterate((e0, e0.count(), -1L), rounds) { case (e, n, _) =>
+        val next = cp(edgeSupport(e).filter(col("sup") >= k - 2).select("a", "b"))
+        (next, next.count(), n)
+      } { case (_, n, prevN) => n == prevN }
+      e.select(col("a").as("node")).unionByName(e.select(col("b").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("truss_degree"))
+        .orderBy("node")
     }
-    e.select(col("a").as("node")).unionByName(e.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("truss_degree"))
-      .orderBy("node")
   }
 
   private def partsGraph(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {

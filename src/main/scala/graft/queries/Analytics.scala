@@ -4,7 +4,7 @@ import graft.Tables
 import graft.functions.Aggregators
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.GraftFunctions
+import org.apache.spark.sql.graft.{GraftFunctions, ParquetRead}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import java.nio.file.Files
@@ -805,8 +805,8 @@ object Analytics {
         .select((col("o_orderkey") % 20).as("k2"), col("o_totalprice"))
         .groupBy("k2").agg(round(sum("o_totalprice"), 2).as("k_total"))
         .write.mode("overwrite").parquet(base + "/dim")
-      val joined = spark.read.parquet(base + "/fact").hint("merge")
-        .join(spark.read.parquet(base + "/dim"), col("k") === col("k2"))
+      val joined = ParquetRead(spark, base + "/fact").hint("merge")
+        .join(ParquetRead(spark, base + "/dim"), col("k") === col("k2"))
         .groupBy("k")
         .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 2).as("qty"),
           max("k_total").as("k_total"))

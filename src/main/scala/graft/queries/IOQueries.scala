@@ -5,6 +5,7 @@ import graft.sinks.TableStore
 import graft.sources.{FvecsIO, Ingest}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParquetRead
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.nio.file.Files
@@ -157,12 +158,12 @@ object IOQueries {
       .select("o_orderkey", "o_orderdate", "o_totalprice")
     val store = tmpDir("incr") + "/orders_incr"
     TableStore.store(orders.filter(col("o_orderdate") < lit("1998-01-01")), store, "replace")
-    val wmUs = spark.read.parquet(store)
+    val wmUs = ParquetRead(spark, store)
       .agg(max(unix_micros(col("o_orderdate").cast("timestamp")))).head.getLong(0)
     TableStore.store(
       orders.filter(unix_micros(col("o_orderdate").cast("timestamp")) > wmUs),
       store, "append")
-    spark.read.parquet(store)
+    ParquetRead(spark, store)
       .groupBy(year(col("o_orderdate")).as("yr"))
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
       .orderBy("yr")
@@ -216,7 +217,7 @@ object IOQueries {
       .repartition(2).write.mode("overwrite").parquet(lake + "/hist")
     orders.filter(col("o_orderdate") >= lit("1998-01-01"))
       .repartition(2).write.mode("overwrite").parquet(lake + "/y1998")
-    def manifestOf(path: String) = spark.read.parquet(path)
+    def manifestOf(path: String) = ParquetRead(spark, path)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"))
     val v1 = manifestOf(lake + "/hist")
@@ -2219,13 +2220,13 @@ object IOQueries {
     val src = Tables.load(spark, dir, "orders").select("o_orderkey", "o_totalprice")
     val path = tmpDir("modes") + "/t"
     TableStore.store(src, path, "replace")
-    val afterReplace = spark.read.parquet(path).count()
+    val afterReplace = ParquetRead(spark, path).count()
     TableStore.store(src, path, "append")
-    val afterAppend = spark.read.parquet(path).count()
+    val afterAppend = ParquetRead(spark, path).count()
     val failRaised =
       try { TableStore.store(src, path, "fail"); false }
       catch { case _: Throwable => true }
-    val afterFail = spark.read.parquet(path).count()
+    val afterFail = ParquetRead(spark, path).count()
     import spark.implicits._
     Seq(
       ("1_replace", afterReplace, true),
@@ -2275,7 +2276,7 @@ object IOQueries {
     val base = tmpDir("codec")
     val rows = Seq("gzip", "snappy", "zstd").map { codec =>
       TableStore.writeCompressed(src, s"$base/$codec", codec)
-      spark.read.parquet(s"$base/$codec")
+      ParquetRead(spark, s"$base/$codec")
         .agg(lit(codec).as("codec"), count(lit(1)).as("n"),
           round(sum("l_extendedprice"), 2).as("total"))
     }
@@ -2300,7 +2301,7 @@ object IOQueries {
     val orders = Tables.load(spark, dir, "orders")
     val lake = tmpDir("lake") + "/orders_lake"
     TableStore.writePartitioned(orders, lake, Seq("o_orderstatus"))
-    spark.read.parquet(lake)
+    ParquetRead(spark, lake)
       .filter(col("o_orderstatus") === "F")
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
@@ -2366,9 +2367,9 @@ object IOQueries {
     src.repartition(64).write.mode("overwrite").parquet(frag)
     def nFiles(p: String): Long =
       new java.io.File(p).listFiles().count(f => f.getName.endsWith(".parquet")).toLong
-    val fragged = spark.read.parquet(frag)
+    val fragged = ParquetRead(spark, frag)
     fragged.coalesce(4).write.mode("overwrite").parquet(tidy)
-    val nRows = spark.read.parquet(tidy).count()
+    val nRows = ParquetRead(spark, tidy).count()
     import spark.implicits._
     Seq(("1_fragmented", nFiles(frag), nFiles(frag) >= 32),
         ("2_compacted", nFiles(tidy), nFiles(tidy) <= 4),
@@ -2397,7 +2398,7 @@ object IOQueries {
       val stored = task("store") {
         val path = tmpDir("flow") + "/lineitem_etl"
         TableStore.store(transformed, path, "replace")
-        spark.read.parquet(path)
+        ParquetRead(spark, path)
       }
       task("query") {
         stored.groupBy("l_returnflag")
@@ -2437,7 +2438,7 @@ object IOQueries {
         }
       }
     }
-    spark.read.parquet(lake)
+    ParquetRead(spark, lake)
       .groupBy("yr")
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
       .orderBy("yr")
@@ -2488,7 +2489,7 @@ object IOQueries {
       .withColumn("o_totalprice", col("o_totalprice") + 1000.0)
     TableStore.upsert(spark, wh, batch1, Seq("o_orderkey"))
     TableStore.upsert(spark, wh, batch2, Seq("o_orderkey"))
-    spark.read.parquet(wh)
+    ParquetRead(spark, wh)
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
       .orderBy("o_orderstatus")
@@ -2570,7 +2571,7 @@ object IOQueries {
       .agg(min("o_custkey").as("min_key"), max("o_custkey").as("max_key"),
         count(lit(1)).as("n_rows"))
     graft.sinks.ManifestStore.publish(spark, base + "/manifest",
-      bounds(spark.read.parquet(lake)))
+      bounds(ParquetRead(spark, lake)))
     val (_, manifest) = graft.sinks.ManifestStore.current(spark, base + "/manifest")
     val files = manifest.select("file", "min_key", "max_key", "n_rows")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -2580,10 +2581,10 @@ object IOQueries {
       if (doomed.isEmpty) Array.empty[(String, Long, Long, Long)]
       else {
         val rw = base + "/rewrite_v2"
-        spark.read.parquet(doomed.map(_._1): _*)
+        ParquetRead(spark, doomed.map(_._1): _*)
           .filter(col("o_custkey") < lo || col("o_custkey") > hi)
           .write.mode("overwrite").parquet(rw)
-        bounds(spark.read.parquet(rw))
+        bounds(ParquetRead(spark, rw))
           .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       }
     import spark.implicits._
@@ -2594,7 +2595,7 @@ object IOQueries {
     val state =
       if (curFiles.isEmpty)
         spark.range(1).select(lit(0L).as("n"), lit(null).cast("double").as("total"))
-      else spark.read.parquet(curFiles: _*)
+      else ParquetRead(spark, curFiles: _*)
         .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
     // file split boundaries are an execution detail; the oracle-stable
     // facts are the surviving aggregate and THAT carry-forward happened
@@ -2618,7 +2619,7 @@ object IOQueries {
     orders.repartitionByRange(8, col("o_orderkey"))
       .sortWithinPartitions("o_orderkey")
       .write.mode("overwrite").parquet(out)
-    spark.read.parquet(out)
+    ParquetRead(spark, out)
       .filter(col("o_orderkey") >= 1000 && col("o_orderkey") < 5000)
       .agg(count(lit(1)).as("n"),
         round(sum("o_totalprice"), 2).as("total"),
@@ -2686,7 +2687,7 @@ object IOQueries {
     val estPerFile = math.max(20000L,
       Tables.load(spark, dir, "orders").count() / 16 * 2)
     val nBits = estPerFile * 16
-    val manifest = spark.read.parquet(lake)
+    val manifest = ParquetRead(spark, lake)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"),
         base64(expr(s"graft_bloom_agg(xxhash64(o_orderkey), ${estPerFile}L, ${nBits}L)"))
@@ -2717,7 +2718,7 @@ object IOQueries {
     val nFiles = files.length.toLong
     // the scan reads ONLY bloom-matching files; the exact key filter
     // keeps the result precise through any bloom false positive
-    val out = spark.read.parquet(hit: _*)
+    val out = ParquetRead(spark, hit: _*)
       .filter(col("o_orderkey").isin(probes: _*))
       .groupBy("o_orderkey")
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
@@ -2753,12 +2754,12 @@ object IOQueries {
       .select(col("o_orderkey"), col("o_totalprice"),
         date_format(col("o_orderdate"), "yyyy-MM").as("month"))
     orders.repartition(8).write.mode("overwrite").parquet(lake + "/gen1")
-    def manifestOf(path: String) = spark.read.parquet(path)
+    def manifestOf(path: String) = ParquetRead(spark, path)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"))
     graft.sinks.ManifestStore.publish(spark, base + "/manifest", manifestOf(lake + "/gen1"))
     // compaction rewrite supersedes gen1; commit points at gen2
-    spark.read.parquet(lake + "/gen1").coalesce(2)
+    ParquetRead(spark, lake + "/gen1").coalesce(2)
       .write.mode("overwrite").parquet(lake + "/gen2")
     graft.sinks.ManifestStore.publish(spark, base + "/manifest", manifestOf(lake + "/gen2"))
     // a failed writer's orphan: on disk, referenced by nothing
@@ -2788,7 +2789,7 @@ object IOQueries {
         "— path-representation mismatch would delete live data")
     val doomed = onDisk.filterNot(p => live.contains(norm(p.toUri.toString)))
     doomed.foreach(p => fs.delete(p, false))
-    spark.read.parquet(live.toSeq: _*)
+    ParquetRead(spark, live.toSeq: _*)
       .groupBy("month")
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
       .withColumn("vacuumed", lit(doomed.nonEmpty))
@@ -2819,7 +2820,7 @@ object IOQueries {
       .select("month", "o_orderkey", "o_totalprice")
       .write.mode("overwrite").partitionBy("month").parquet(lake)
     graft.sinks.ManifestStore.publish(spark, base + "/manifest",
-      spark.read.parquet(lake)
+      ParquetRead(spark, lake)
         .groupBy(input_file_name().as("file"))
         .agg(count(lit(1)).as("n_rows"), min("month").as("month")))
     val (_, v1) = graft.sinks.ManifestStore.current(spark, base + "/manifest")
@@ -2921,7 +2922,7 @@ object IOQueries {
       .select(col("o_orderkey"), col("o_totalprice"), col("month"))
     val v1data = orders.filter(col("month") < cutoff)
     v1data.repartition(4).write.mode("overwrite").parquet(lake + "/gen1")
-    def manifestOf(path: String) = spark.read.parquet(path)
+    def manifestOf(path: String) = ParquetRead(spark, path)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"))
     graft.sinks.ManifestStore.publish(spark, man, manifestOf(lake + "/gen1"))
@@ -2944,9 +2945,9 @@ object IOQueries {
     def filesOf(v: Long): Array[String] =
       spark.read.json(new Path(new Path(manifestBase), s"manifest_v$v").toString)
         .select("file").collect().map(_.getString(0))
-    val pre = spark.read.parquet(filesOf(fromV): _*)
+    val pre = ParquetRead(spark, filesOf(fromV): _*)
       .select(col("o_orderkey"), col("o_totalprice").as("pre_price"))
-    val post = spark.read.parquet(filesOf(toV): _*)
+    val post = ParquetRead(spark, filesOf(toV): _*)
       .select(col("o_orderkey"), col("o_totalprice").as("post_price"))
     pre.join(post, Seq("o_orderkey"), "full_outer")
       .withColumn("_change_type",
@@ -2989,7 +2990,7 @@ object IOQueries {
       .select("month", "o_orderkey", "o_totalprice")
     orders.filter(col("month") < "1997-01")
       .repartition(4).write.mode("overwrite").parquet(srcLake + "/gen1")
-    def manifestOf(path: String) = spark.read.parquet(path)
+    def manifestOf(path: String) = ParquetRead(spark, path)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"))
     graft.sinks.ManifestStore.publish(spark, srcMan, manifestOf(srcLake + "/gen1"))
@@ -3007,9 +3008,9 @@ object IOQueries {
     val (_, cloneCur) = graft.sinks.ManifestStore.current(spark, cloneMan)
     val cloneFiles = cloneCur.select("file").collect().map(_.getString(0))
     val (_, srcCur) = graft.sinks.ManifestStore.current(spark, srcMan)
-    val srcN = spark.read.parquet(
+    val srcN = ParquetRead(spark,
       srcCur.select("file").collect().map(_.getString(0)): _*).count()
-    spark.read.parquet(cloneFiles: _*)
+    ParquetRead(spark, cloneFiles: _*)
       .groupBy("month")
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
       .withColumn("source_rows", lit(srcN))
@@ -3055,7 +3056,7 @@ object IOQueries {
       .write.mode("overwrite").parquet(lake + "/frag")
     orders.filter(col("month") =!= "1997-01").repartition(2)
       .write.mode("overwrite").parquet(lake + "/ok")
-    def manifestOf(path: String) = spark.read.parquet(path)
+    def manifestOf(path: String) = ParquetRead(spark, path)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"))
     graft.sinks.ManifestStore.publish(spark, man,
@@ -3073,7 +3074,7 @@ object IOQueries {
     // and nothing to publish — v2 stays v1. An empty-list
     // spark.read.parquet would throw UNABLE_TO_INFER_SCHEMA here.
     if (small.nonEmpty) {
-      spark.read.parquet(small: _*)
+      ParquetRead(spark, small: _*)
         .repartitionByRange(2, col("o_orderkey"))
         .sortWithinPartitions("o_orderkey")
         .write.mode("overwrite").parquet(lake + "/compacted")
@@ -3082,7 +3083,7 @@ object IOQueries {
     }
     val (_, v2) = graft.sinks.ManifestStore.current(spark, man)
     val files = v2.select("file").collect().map(_.getString(0))
-    spark.read.parquet(files: _*)
+    ParquetRead(spark, files: _*)
       .groupBy("month")
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
       .withColumn("optimized", lit(files.length < v1.count()))
@@ -3308,7 +3309,7 @@ object IOQueries {
       .withColumn("q", substring(col("ship_month"), 6, 2))
       .filter(col("yr") === "1996" && col("q").isin("01", "02", "03"))
       .select("ship_month")
-    spark.read.parquet(lake)
+    ParquetRead(spark, lake)
       .join(broadcast(dim), "ship_month")
       .groupBy("ship_month")
       .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 2).as("qty"),
@@ -3351,7 +3352,7 @@ object IOQueries {
     joined(oldO, oldC).write.mode("overwrite").parquet(stored)
     // day 2: three delta-sized joins refresh the view — the stored
     // term is a parquet read-back, never recomputed
-    val refreshed = spark.read.parquet(stored)
+    val refreshed = ParquetRead(spark, stored)
       .unionByName(joined(newO, oldC))
       .unionByName(joined(oldO, newC))
       .unionByName(joined(newO, newC))
@@ -3455,7 +3456,7 @@ object IOQueries {
     def stage(name: String, batch: DataFrame): (Long, Long, Boolean, Long) = {
       val path = s"$base/staged_$name"
       batch.write.mode("overwrite").parquet(path)
-      val a = audit(spark.read.parquet(path))
+      val a = audit(ParquetRead(spark, path))
       val (n, bad) = (a.getLong(0), a.getLong(1))
       if (bad == 0L) {
         import spark.implicits._
@@ -3475,7 +3476,7 @@ object IOQueries {
     val s3 = stage("fixed",
       corrupt.filter(col("o_totalprice") > 0 && col("o_orderstatus").isNotNull))
     val (_, cur) = graft.sinks.ManifestStore.current(spark, manifestDir)
-    val liveRows = spark.read.parquet(
+    val liveRows = ParquetRead(spark,
       cur.select("path").collect().head.getString(0)).count()
     import spark.implicits._
     Seq(("1_publish_clean", s1), ("2_reject_corrupt", s2),
@@ -3521,14 +3522,14 @@ object IOQueries {
     def commitSnapshot(name: String, df: DataFrame): Long = {
       val path = s"$base/data/$name"
       df.write.mode("overwrite").parquet(path)
-      val files = spark.read.parquet(path)
+      val files = ParquetRead(spark, path)
         .groupBy(input_file_name().as("file")).agg(count(lit(1)).as("n_rows"))
       graft.sinks.ManifestStore.publish(spark, versionsDir, files)
     }
     def readRef(name: String): DataFrame = {
       val (_, v) = graft.sinks.RefStore.resolve(spark, refsDir, name)
       val (_, man) = graft.sinks.ManifestStore.at(spark, versionsDir, Some(v))
-      spark.read.parquet(man.select("file").collect().map(_.getString(0)): _*)
+      ParquetRead(spark, man.select("file").collect().map(_.getString(0)): _*)
     }
     def refVersion(name: String): Long =
       graft.sinks.RefStore.resolve(spark, refsDir, name)._2
@@ -3624,7 +3625,7 @@ object IOQueries {
     def stageFiles(txn: String, table: String, df: DataFrame): DataFrame = {
       val path = s"$base/lake/$table/$txn"
       df.write.mode("overwrite").parquet(path)
-      spark.read.parquet(path)
+      ParquetRead(spark, path)
         .groupBy(input_file_name().as("file"))
         .agg(count(lit(1)).as("n_rows"))
         .select(lit(table).as("table"), col("file"), col("n_rows"))
@@ -3646,7 +3647,7 @@ object IOQueries {
     def summary(table: String): DataFrame = {
       val files = cat.filter(col("table") === table)
         .select("file").collect().map(_.getString(0))
-      spark.read.parquet(files: _*)
+      ParquetRead(spark, files: _*)
         .agg(count(lit(1)).as("n_groups"),
           sum("n").as("grand_n"),
           sum(col("total_micro").cast("decimal(38,0)")).cast("long")
@@ -3774,7 +3775,7 @@ object IOQueries {
       ("o_orderstatus", "string"), ("o_totalprice", "decimal(12,2)"),
       ("o_orderdate", "timestamp"), ("o_channel", "string"))
       .toDF("column", "expected")
-    val actual = spark.read.parquet(Tables.path(dir, "orders")).schema
+    val actual = ParquetRead(spark, Tables.path(dir, "orders")).schema
       // ntz and ltz both arrive as plain TIMESTAMP through the oracle's
       // reader — normalize so the contract compares the logical type
       .map(f => (f.name, f.dataType.simpleString.replace("timestamp_ntz", "timestamp")))
@@ -3845,7 +3846,7 @@ object IOQueries {
       .sortWithinPartitions("o_orderkey")
       .write.mode("overwrite").parquet(lake)
     graft.sinks.ManifestStore.publish(spark, base + "/manifest",
-      spark.read.parquet(lake)
+      ParquetRead(spark, lake)
         .groupBy(input_file_name().as("file"))
         .agg(min("o_orderkey").as("min_key"), max("o_orderkey").as("max_key"),
           count(lit(1)).as("n_rows")))
@@ -3863,7 +3864,7 @@ object IOQueries {
         spark.range(1).select(lit(0L).as("n"),
           lit(null).cast("double").as("total"))
       else
-        spark.read.parquet(wanted: _*)
+        ParquetRead(spark, wanted: _*)
           .filter(col("o_orderkey") >= lo && col("o_orderkey") <= hi)
           .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
     // file split boundaries are an execution detail — the oracle-stable
@@ -3913,7 +3914,7 @@ object IOQueries {
       case Some(v) => spark.conf.set(conf, v)
       case None => spark.conf.unset(conf)
     }
-    spark.read.parquet(lake)
+    ParquetRead(spark, lake)
       .groupBy("month")
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
       .withColumn("corrected", col("month") === fixMonth)
@@ -3985,7 +3986,7 @@ object IOQueries {
                                   batch: org.apache.spark.sql.DataFrame): Long = {
     import org.apache.spark.sql.types.StructType
     batch.write.mode("overwrite").parquet(batchDir)
-    val onDisk = spark.read.parquet(batchDir)
+    val onDisk = ParquetRead(spark, batchDir)
     val incoming = onDisk.schema
     val prev = graft.sinks.ManifestStore.versions(spark, manifestBase).lastOption
       .map(_ => graft.sinks.ManifestStore.current(spark, manifestBase)._2)
@@ -4055,7 +4056,7 @@ object IOQueries {
     // day 2: a new batch lands; only ITS rows aggregate, then one
     // rollup-sized combine refreshes the store
     val delta = partials(orders.filter(col("month") >= lit(cutoff.substring(0, 7))))
-    spark.read.parquet(stored).unionByName(delta)
+    ParquetRead(spark, stored).unionByName(delta)
       .groupBy("month")
       .agg(sum("n").as("n"), round(sum("total"), 2).as("total"))
       .orderBy("month")
@@ -4088,7 +4089,7 @@ object IOQueries {
     monthly.join(broadcast(holes), Seq("month"), "left_anti")
       .write.partitionBy("month").mode("overwrite").parquet(base + "/lake")
     graft.sinks.ManifestStore.publish(spark, man,
-      spark.read.parquet(base + "/lake")
+      ParquetRead(spark, base + "/lake")
         .groupBy(input_file_name().as("file"))
         .agg(min("month").as("month"), count(lit(1)).as("n_rows")))
     // the audit: expected calendar (from the source's span) vs the
@@ -4141,7 +4142,7 @@ object IOQueries {
       .withColumn("month", date_format(col("o_orderdate"), "yyyy-MM"))
       .select("month", "o_orderkey", "o_totalprice", "o_orderpriority")
     def rowsOf(path: String, spec: Long, partPriority: Boolean) =
-      spark.read.parquet(path)
+      ParquetRead(spark, path)
         .groupBy(input_file_name().as("file"))
         .agg(count(lit(1)).as("n_rows"), min("month").as("month"),
           (if (partPriority) min("o_orderpriority")
@@ -4215,7 +4216,7 @@ object IOQueries {
     val orders = Tables.load(spark, dir, "orders")
       .withColumn("month", date_format(col("o_orderdate"), "yyyy-MM"))
       .select("month", "o_orderkey", "o_totalprice")
-    def manifestOf(path: String) = spark.read.parquet(path)
+    def manifestOf(path: String) = ParquetRead(spark, path)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"))
     orders.filter(col("month") < cutoff)
@@ -4234,7 +4235,7 @@ object IOQueries {
     graft.sinks.ManifestStore.publish(spark, man, pinned.select("file", "n_rows"))
     val (curV, cur) = graft.sinks.ManifestStore.current(spark, man)
     val files = cur.select("file").collect().map(_.getString(0))
-    spark.read.parquet(files: _*)
+    ParquetRead(spark, files: _*)
       .groupBy("month")
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
       .withColumn("restored_from_version", lit(1L))
@@ -4274,7 +4275,7 @@ object IOQueries {
     def landed(path: String, df: org.apache.spark.sql.DataFrame,
                schemaV: Long): DataFrame = {
       df.write.mode("overwrite").parquet(path)
-      val onDisk = spark.read.parquet(path)
+      val onDisk = ParquetRead(spark, path)
       onDisk.groupBy(input_file_name().as("file"))
         .agg(count(lit(1)).as("n_rows"))
         .withColumn("schema_version", lit(schemaV))
@@ -4307,7 +4308,7 @@ object IOQueries {
     val purgedDir = base + "/lake/purged"
     spark.read.schema(narrow).parquet(wide: _*)
       .repartition(2).write.mode("overwrite").parquet(purgedDir)
-    val purgedRows = spark.read.parquet(purgedDir)
+    val purgedRows = ParquetRead(spark, purgedDir)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"))
       .withColumn("schema_version", lit(2L))

@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParquetRead
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Managed-table storage — the reference's `store_table_in_db`
@@ -84,7 +85,7 @@ object TableStore {
     val tagged = batch.dropDuplicates(keys).withColumn("__v", lit(1))
     val merged =
       if (fs.exists(target)) {
-        val existing = spark.read.parquet(path).withColumn("__v", lit(0))
+        val existing = ParquetRead(spark, path).withColumn("__v", lit(0))
         val w = Window.partitionBy(keys.map(col): _*).orderBy(col("__v").desc)
         existing.unionByName(tagged)
           .withColumn("__rn", row_number().over(w))
@@ -111,7 +112,7 @@ object TableStore {
     val valueCols = batch.columns.filterNot(keys.contains)
     val merged =
       if (fs.exists(target))
-        spark.read.parquet(path).unionByName(batch)
+        ParquetRead(spark, path).unionByName(batch)
           .groupBy(keys.map(col): _*)
           .agg(valueCols.map(c => sum(c).as(c)).head,
             valueCols.map(c => sum(c).as(c)).tail: _*)
@@ -178,7 +179,7 @@ object TableStore {
       val writerId = java.util.UUID.randomUUID().toString.take(12)
       val dataDir = s"$base/data_$writerId"
       merged.write.mode(SaveMode.ErrorIfExists).parquet(dataDir)
-      val nRows = spark.read.parquet(dataDir).count()
+      val nRows = ParquetRead(spark, dataDir).count()
       import spark.implicits._
       val manifest = Seq((dataDir, nRows, basedOn))
         .toDF("data_dir", "n_rows", "based_on")
@@ -195,7 +196,7 @@ object TableStore {
   /** The table as of a committed CDC version. */
   def readCdcVersion(spark: SparkSession, base: String, version: Long): DataFrame = {
     val manifest = spark.read.json(s"$base/manifest/manifest_v$version")
-    spark.read.parquet(manifest.select("data_dir").head.getString(0))
+    ParquetRead(spark, manifest.select("data_dir").head.getString(0))
   }
 
   /** The current committed CDC table (highest version). */
@@ -242,7 +243,7 @@ object TableStore {
     val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val v = version.orElse(latestVersion(fs, base)).getOrElse(
       throw new IllegalStateException(s"no versions under $base"))
-    spark.read.parquet(s"$base/v=$v")
+    ParquetRead(spark, s"$base/v=$v")
   }
 
   private def latestVersion(fs: org.apache.hadoop.fs.FileSystem,

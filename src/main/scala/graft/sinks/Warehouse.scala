@@ -1,5 +1,6 @@
 package graft.sinks
 
+import org.apache.spark.sql.graft.ParquetRead
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** External-warehouse writers — the reference's Postgres store
@@ -61,7 +62,7 @@ final class FileWarehouse(baseDir: String) extends WarehouseWriter {
   override def write(df: DataFrame, table: String, mode: String): Unit =
     df.write.mode(saveMode(mode)).parquet(path(table))
   override def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(path(table))
+    ParquetRead(spark, path(table))
   override def exists(spark: SparkSession, table: String): Boolean =
     new org.apache.hadoop.fs.Path(path(table))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

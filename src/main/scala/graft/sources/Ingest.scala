@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.sql.graft.ParquetRead
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -33,7 +34,7 @@ object Ingest {
   }
 
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    ParquetRead(spark, path)
 
   /** CSV with header. Explicit schema when provided (the scale path);
     * otherwise inference (samples the file — fine for interactive use,

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParquetRead
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.nio.file.Files
@@ -128,7 +129,7 @@ object Events {
     */
   def streamSliding(spark: SparkSession, dir: String): DataFrame = {
     val input = stageStreamInput(spark, dir, copies = 1)
-    val schema = spark.read.parquet(input).schema
+    val schema = ParquetRead(spark, input).schema
     val stream = spark.readStream.schema(schema).parquet(input)
       .withColumn("ts", timestamp_micros(expr("ts div 1000")))
     val agg = stream
@@ -159,7 +160,7 @@ object Events {
     */
   def streamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
     val input = stageStreamInput(spark, dir, copies = 1)
-    val schema = spark.read.parquet(input).schema
+    val schema = ParquetRead(spark, input).schema
     def stream() = spark.readStream.schema(schema).parquet(input)
       .withColumn("ts", timestamp_micros(expr("ts div 1000")))
     val clicks = stream().filter(col("event_type") === "click")
@@ -226,7 +227,7 @@ object Events {
     // slept for — coarse/non-monotonic filesystem mtimes can't
     // reorder the pusher batches behind the real feed
     StreamStage.stageOrderedBatches(feed, Seq(real, pusher(30), pusher(31)))
-    val schema = spark.read.parquet(feed).schema
+    val schema = ParquetRead(spark, feed).schema
     def stream() = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(feed)
       .withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -284,7 +285,7 @@ object Events {
       (-2L, maxTs + offsetDays * dayNs, -1L, "purchase"))
       .toDF("event_id", "ts", "user_id", "event_type")
     StreamStage.stageOrderedBatches(feed, Seq(real, pusher(30), pusher(31)))
-    val schema = spark.read.parquet(feed).schema
+    val schema = ParquetRead(spark, feed).schema
     def stream() = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(feed)
       .withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -343,7 +344,7 @@ object Events {
     val events = Tables.eventsTsAsNanosLong(spark, dir)
       .select("event_id", "user_id", "event_type", "value")
     def runOnce(): Unit = {
-      val schema = spark.read.parquet(feed).schema
+      val schema = ParquetRead(spark, feed).schema
       val q = spark.readStream.schema(schema).parquet(feed)
         .writeStream.format("parquet")
         .option("path", out).option("checkpointLocation", cp)
@@ -359,7 +360,7 @@ object Events {
     // late arrivals land AFTER the first query instance terminated
     StreamStage.appendAfter(feed, events.filter(col("event_id") % 3 === 0))
     runOnce()
-    spark.read.parquet(out)
+    ParquetRead(spark, out)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         countDistinct(col("event_id")).as("n_distinct"),
@@ -377,7 +378,7 @@ object Events {
     */
   def streamStaticEnrich(spark: SparkSession, dir: String): DataFrame = {
     val input = stageStreamInput(spark, dir, copies = 1)
-    val schema = spark.read.parquet(input).schema
+    val schema = ParquetRead(spark, input).schema
     val userDim = Tables.load(spark, dir, "events")
       .groupBy("user_id")
       .agg(count(lit(1)).as("user_events"), round(avg("value"), 2).as("user_avg_value"))
@@ -419,7 +420,7 @@ object Events {
     */
   def streamAsof(spark: SparkSession, dir: String): DataFrame = {
     val input = stageStreamInput(spark, dir, copies = 1)
-    val schema = spark.read.parquet(input).schema
+    val schema = ParquetRead(spark, input).schema
     val clickHist = Tables.load(spark, dir, "events")
       .filter(col("event_type") === "click")
       .groupBy("user_id")
@@ -455,7 +456,7 @@ object Events {
     */
   def streamUpsert(spark: SparkSession, dir: String): DataFrame = {
     val input = stageStreamInput(spark, dir, copies = 2)
-    val schema = spark.read.parquet(input).schema
+    val schema = ParquetRead(spark, input).schema
     val target = Files.createTempDirectory("graft_stream_upsert").toString + "/purchases"
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "4") // force several micro-batches
@@ -470,7 +471,7 @@ object Events {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(target)
+    ParquetRead(spark, target)
       .agg(
         count(lit(1)).as("n_rows"),
         countDistinct("event_id").as("n_events"),
@@ -500,7 +501,7 @@ object Events {
   def streamLakeIngest(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graft.GraftLakeTable
     val input = stageStreamInput(spark, dir, copies = 1)
-    val schema = spark.read.parquet(input).schema
+    val schema = ParquetRead(spark, input).schema
     val table = Files.createTempDirectory("graft_stream_lake").toString + "/t"
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "2") // force several commits
@@ -521,7 +522,7 @@ object Events {
     val manBase = s"$table/manifest"
     val v = graft.sinks.ManifestStore.versions(spark, manBase).last
     val files = GraftLakeTable.manifestRows(spark, manBase, v).map(r => s"$table/${r._1}")
-    spark.read.parquet(files: _*)
+    ParquetRead(spark, files: _*)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
         countDistinct("event_id").as("n_events"),
@@ -555,7 +556,7 @@ object Events {
     import org.apache.spark.sql.graft.GraftLakeTable
     graft.queries.IOQueries.ensureCatalog(spark)
     val input = stageStreamInput(spark, dir, copies = 1)
-    val schema = spark.read.parquet(input).schema
+    val schema = ParquetRead(spark, input).schema
     spark.sql("DROP TABLE IF EXISTS graft.lake.user_state")
     spark.sql(
       """CREATE TABLE graft.lake.user_state (
@@ -623,7 +624,7 @@ object Events {
     import org.apache.spark.sql.graft.GraftLakeTable
     graft.queries.IOQueries.ensureCatalog(spark)
     val input = stageStreamInput(spark, dir, copies = 1)
-    val schema = spark.read.parquet(input).schema
+    val schema = ParquetRead(spark, input).schema
     spark.sql("DROP TABLE IF EXISTS graft.lake.user_state_mor")
     spark.sql(
       """CREATE TABLE graft.lake.user_state_mor (
@@ -850,7 +851,7 @@ object Events {
     val orders = Tables.load(spark, dir, "orders")
       .withColumn("month", date_format(col("o_orderdate"), "yyyy-MM"))
       .select(col("o_orderkey"), col("o_totalprice"), col("month"))
-    def manifestOf(path: String) = spark.read.parquet(path)
+    def manifestOf(path: String) = ParquetRead(spark, path)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"))
     val (c1, c2) = ("1997-01", "1997-07")
@@ -979,7 +980,7 @@ object Events {
   def streamHeavyHitters(spark: SparkSession, dir: String,
                          capacity: Int = 64, topK: Int = 10): DataFrame = {
     val input = stageStreamInput(spark, dir, copies = 1)
-    val schema = spark.read.parquet(input).schema
+    val schema = ParquetRead(spark, input).schema
     val mg = udaf(graft.functions.Aggregators.MisraGries(capacity))
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "2") // several state-fold rounds
@@ -1000,7 +1001,7 @@ object Events {
     // order — the planted skew puts the hot keys far above 2·bound and
     // the tail at 1, so no key lives in the flappable band HERE; a
     // reuse with different skew must re-check that separation
-    val n = spark.read.parquet(input).count()
+    val n = ParquetRead(spark, input).count()
     val bound = n / (capacity + 1)
     spark.table("graft_stream_hh")
       .select(explode(col("summary")).as("e"))
@@ -1023,7 +1024,7 @@ object Events {
     */
   def streamIncrRollup(spark: SparkSession, dir: String): DataFrame = {
     val input = stageStreamInput(spark, dir, copies = 1)
-    val schema = spark.read.parquet(input).schema
+    val schema = ParquetRead(spark, input).schema
     val target = Files.createTempDirectory("graft_stream_rollup").toString + "/daily"
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "2") // force several merge rounds
@@ -1040,7 +1041,7 @@ object Events {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.read.parquet(target)
+    ParquetRead(spark, target)
       .select(col("d"), col("n"),
         round(col("v_micro") / 1e6, 2).as("total_value"))
       .orderBy("d")
@@ -1083,7 +1084,7 @@ object Events {
       raw.filter(col("ts") >= p20 && col("ts") < p95),
       raw.filter(col("ts") >= p95),
       raw.filter(col("ts") < p20)))
-    val schema = spark.read.parquet(inDir).schema
+    val schema = ParquetRead(spark, inDir).schema
     val sinkName = s"graft_stream_late_${streamCounter.incrementAndGet()}"
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
@@ -1193,7 +1194,7 @@ object Events {
           .withColumn("op", lit("insert")).withColumn("seq", lit(1L))),
       orders.filter(k === 2)
         .withColumn("op", lit("delete")).withColumn("seq", lit(2L))))
-    val schema = spark.read.parquet(feed).schema
+    val schema = ParquetRead(spark, feed).schema
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1") // one merge round per feed file
       .parquet(feed)
@@ -1293,7 +1294,7 @@ object Events {
     */
   def streamParity(spark: SparkSession, dir: String): DataFrame = {
     val input = stageStreamInput(spark, dir, copies = 1)
-    val schema = spark.read.parquet(input).schema
+    val schema = ParquetRead(spark, input).schema
     val stream = spark.readStream.schema(schema).parquet(input)
       .withColumn("ts", timestamp_micros(expr("ts div 1000")))
     runToMemory(hourlyAgg(stream.withWatermark("ts", "1 hour")),
@@ -1384,7 +1385,7 @@ object Events {
     StreamStage.stageOrderedBatches(base + "/feedB", Seq(
       odds.filter(!straggler && !lagged),
       odds.filter(straggler || lagged).unionByName(sentinel(odds))))
-    val schema = spark.read.parquet(base + "/feedA").schema
+    val schema = ParquetRead(spark, base + "/feedA").schema
     def feed(path: String) =
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(path)
@@ -1419,7 +1420,7 @@ object Events {
     base.unionByName(sentinels.select("user_id", "ts_us", "sentinel"))
       .repartition(8).write.mode("overwrite").parquet(staged)
 
-    val schema = spark.read.parquet(staged).schema
+    val schema = ParquetRead(spark, staged).schema
     val stream = spark.readStream.schema(schema).parquet(staged)
       .as[(Long, Long, Boolean)]
 
@@ -1475,7 +1476,7 @@ object Events {
     */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
     val input = stageStreamInput(spark, dir, copies = 2)
-    val schema = spark.read.parquet(input).schema
+    val schema = ParquetRead(spark, input).schema
     val stream = spark.readStream.schema(schema).parquet(input)
       .withColumn("ts", timestamp_micros(expr("ts div 1000")))
     val deduped = stream
@@ -1520,7 +1521,7 @@ object Events {
         .filter(col("event_type") === "purchase")
         .select(col("user_id"), col("value"))
         .repartition(8).write.mode("overwrite").parquet(staged)
-      val schema = spark.read.parquet(staged).schema
+      val schema = ParquetRead(spark, staged).schema
       val stream = spark.readStream.schema(schema).parquet(staged).as[(Long, Double)]
       val updates = stream.groupByKey(_._1)
         .transformWithState(new PurchaseStatsProcessor,
@@ -1607,7 +1608,7 @@ object Events {
         ev.filter(col("ts_us") > median),
         Seq((-1L, maxUs + 365L * 86400L * 1000000L)).toDF("user_id", "ts_us"),
         Seq((-1L, maxUs + 366L * 86400L * 1000000L)).toDF("user_id", "ts_us")))
-      val schema = spark.read.parquet(staged).schema
+      val schema = ParquetRead(spark, staged).schema
       val sessions = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(staged)
@@ -1688,7 +1689,7 @@ object Events {
         ev.filter(col("ts") > q1 && col("ts") <= q2),
         ev.filter(col("ts") > q2 && col("ts") <= q3),
         ev.filter(col("ts") > q3)))
-      val schema = spark.read.parquet(staged).schema
+      val schema = ParquetRead(spark, staged).schema
       val updates = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(staged)
         .as[(Long, Long, Long)]

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.Tables
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ParquetRead
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.nio.file.Files
@@ -110,8 +111,8 @@ object StreamBench {
         .withColumn("event_id", col("event_id") + col("rep") * maxId)
         .drop("rep")
       StreamStage.stageTimeOrdered(replicated, "ts", feed, nFiles)
-      val events = spark.read.parquet(feed).count()
-      val schema = spark.read.parquet(feed).schema
+      val events = ParquetRead(spark, feed).count()
+      val schema = ParquetRead(spark, feed).schema
 
       // one micro-batched file stream over the staged feed
       def stream(fpt: Int = filesPerTrigger): DataFrame = spark.readStream

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointIds
 
 /** Deterministic arrival-order staging for file-stream feeds.
   *
@@ -82,23 +83,11 @@ object StreamStage {
     * over the staging data only (never a timed path).
     */
   private[graft] def stageTimeOrdered(df: DataFrame, tsCol: String,
-                                      out: String, nFiles: Int): Unit = {
-    // free the checkpointed staging blocks by RDD id: Dataset.unpersist
-    // is a no-op for localCheckpoint'ed frames (CacheManager has no
-    // entry — the storage is on the internal RDD). The ids come from
-    // the frame's own LogicalRDD leaves, not a getPersistentRDDs
-    // set-diff, so concurrent persists are never mis-attributed
-    val sc = df.sparkSession.sparkContext
-    val bucketed = df
-      .withColumn("_b", ntile(nFiles).over(Window.orderBy(col(tsCol))))
-      .localCheckpoint()
-    val mine = org.apache.spark.sql.graft.CheckpointIds.of(bucketed)
-    try
+                                      out: String, nFiles: Int): Unit =
+    // the scope frees the staging checkpoint once every batch is written
+    CheckpointIds.scoped(df.sparkSession) { cp =>
+      val bucketed = cp(df.withColumn("_b", ntile(nFiles).over(Window.orderBy(col(tsCol)))))
       stageOrderedBatches(out,
         (1 to nFiles).map(b => bucketed.filter(col("_b") === b).drop("_b")))
-    finally {
-      val persisted = sc.getPersistentRDDs
-      mine.foreach(id => persisted.get(id).foreach(_.unpersist(blocking = true)))
     }
-  }
 }

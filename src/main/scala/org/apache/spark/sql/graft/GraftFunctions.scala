@@ -136,7 +136,7 @@ object GraftTableFunction {
       val (_, manifest) = graft.sinks.ManifestStore.at(spark, base, version)
       val files = manifest.select("file").collect().map(_.getString(0))
       require(files.nonEmpty, s"manifest under $base lists no files")
-      spark.read.parquet(files.toIndexedSeq: _*).queryExecution.analyzed
+      ParquetRead(spark, files.toIndexedSeq: _*).queryExecution.analyzed
     })
 }
 

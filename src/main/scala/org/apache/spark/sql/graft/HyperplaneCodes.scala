@@ -22,6 +22,8 @@ case class HyperplaneCodes(child: Expression, planes: Seq[Seq[Seq[Double]]])
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "hyperplane_codes"
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, ConstantTable.digest("planes", planes, nTables, bits, dim))
 
   @transient private lazy val nTables = planes.length
   @transient private lazy val bits = planes.head.length

@@ -35,6 +35,9 @@ case class MatrixProject(child: Expression,
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "matrix_project"
+  override protected def stringArgs: Iterator[Any] = Iterator(child,
+    ConstantTable.digest("matrix", matrix, matrix.length, matrix.head.length),
+    ConstantTable.digest("offset", offset, offset.length))
 
   override def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]

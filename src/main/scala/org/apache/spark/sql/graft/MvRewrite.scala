@@ -59,7 +59,7 @@ object MvRewrite extends Rule[LogicalPlan] {
   def register(spark: SparkSession, name: String,
                definition: DataFrame, path: String): Unit = {
     definition.write.mode("overwrite").parquet(path)
-    val mat = spark.read.parquet(path)
+    val mat = ParquetRead(spark, path)
     // the substitution below restores names/exprIds/nullability, but
     // it cannot repair a TYPE drift through the parquet round-trip —
     // refuse at register time rather than corrupting parent operators

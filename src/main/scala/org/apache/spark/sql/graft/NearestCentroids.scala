@@ -30,6 +30,8 @@ case class NearestCentroids(child: Expression, centroids: Seq[Seq[Double]], nPro
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "nearest_centroids"
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, ConstantTable.digest("centroids", centroids, k, dim), nProbe)
 
   @transient private lazy val k = centroids.length
   @transient private lazy val dim = centroids.head.length

@@ -28,6 +28,8 @@ case class PqEncode(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "pq_encode"
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, ConstantTable.digest("codebooks", codebooks, m, k, subDim))
 
   @transient private lazy val m = codebooks.length
   @transient private lazy val k = codebooks.head.length

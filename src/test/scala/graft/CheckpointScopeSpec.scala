@@ -39,6 +39,7 @@ class CheckpointScopeSpec extends SparkSpec {
       spark.range(1, 3).select(col("id").as("snode")), iters = 3, topK = 5)),
     "labelPropOf" -> (() => Graph.labelPropOf(pairs, iters = 3)),
     "ktrussOf" -> (() => Graph.ktrussOf(canonical, k = 4, rounds = 4)),
+    "ktrussFullOf" -> (() => Graph.ktrussFullOf(canonical, k = 4, rounds = 4)),
     "kcoreOf" -> (() => Graph.kcoreOf(pairs, k = 2, rounds = 8)),
     "ssspOf" -> (() => Graph.ssspOf(pairs.withColumn("w", col("src") + 1L), iters = 4, topK = 5)),
     "betweennessOf" -> (() => Graph.betweennessOf(pairs, iters = 3, nSources = 3, topK = 5)),
@@ -126,6 +127,16 @@ class CheckpointScopeSpec extends SparkSpec {
     assert(second.count() == 5L && other.count() == 8L)
   }
 
+  test("stageTimeOrdered frees its staging checkpoint once every batch is written") {
+    val out = java.nio.file.Files.createTempDirectory("graft_stage").resolve("feed").toString
+    val before = persisted()
+    graft.streaming.StreamStage.stageTimeOrdered(
+      pairs.withColumn("ts", col("src") * 10L + col("dst")), "ts", out, nFiles = 3)
+    val leaked = persisted() -- before
+    assert(leaked.isEmpty, s"stageTimeOrdered left checkpoints $leaked persisted")
+    assert(spark.read.parquet(out).count() == 8L)
+  }
+
   test("embCoreset checkpoints its distances only while another round reads them") {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -139,8 +150,9 @@ class CheckpointScopeSpec extends SparkSpec {
       // k = 4 runs 3 rounds and 3 checkpoints: the seed's distances and
       // rounds 1–2's, each materialized by the one job that measures
       // its size. Checkpointing round 3's distances too, which nothing
-      // reads, took 17 jobs.
-      assert(jobs.get() == 16, s"embCoreset(k = 4) ran ${jobs.get()} jobs")
+      // reads, took 17 jobs; inferring the embeddings' schema with a
+      // job of its own, 16.
+      assert(jobs.get() == 15, s"embCoreset(k = 4) ran ${jobs.get()} jobs")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
