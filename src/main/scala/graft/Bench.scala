@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ParquetRead
 
@@ -41,7 +41,7 @@ import org.apache.spark.sql.graft.ParquetRead
   * extended between entries and skips scale/streaming when exceeded
   * (reported in `skipped_blocks`/`truncated_entries`); one stderr
   * heartbeat per entry timestamps where the clock goes; and the
-  * [[ProfileJobCost]] per-job fixed-cost probe rides in every emission
+  * [[BenchSentinel.measure]] per-job fixed-cost probe rides in every emission
   * (`job_cost`) beside [[BenchSentinel]]'s CPU channel.
   */
 object Bench {
@@ -230,6 +230,57 @@ object Bench {
     out
   }
 
+  /** A query's bench timing: the median, min and spread (max − min) of
+    * its warm runs, and `iters`, every run in RUN ORDER (cold first)
+    * so run-over-run degradation inside one JVM — the r7 g_clustering
+    * pathology — is visible in the artifact itself rather than
+    * inferred from cross-block comparisons.
+    */
+  private[graft] final case class Timing(median: Double, min: Double, spread: Double,
+                                         iters: Seq[Double])
+
+  /** One timed run of query `name` over `dir`, in seconds. */
+  private[graft] def runOnce(spark: SparkSession, name: String, dir: String): Double = {
+    // drop cross-entry shared artifacts (the G2/G8 memoized triangle
+    // stream) before EVERY timed run: the bench grades the full
+    // pipeline at each scale, not memo reuse — otherwise the
+    // scale-step ratio of a shared-pass operator would measure
+    // cache-hit arithmetic and read as fake sub-linearity
+    graft.operators.Graph.dropSharedCache(spark)
+    val t0 = System.nanoTime()
+    // full materialization: a bare .count() lets Catalyst prune the
+    // projected expressions (and drop final sorts) under
+    // Aggregate(count(1)), so pure-projection queries would report the
+    // scan, not the work; the noop sink evaluates every column
+    SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Time query `name` over `dir` the way every bench block grades it:
+    * one cold run (codegen + file listing), then three warm runs. `each`
+    * sees every run's seconds as it finishes.
+    */
+  private[graft] def timeQuery(spark: SparkSession, name: String, dir: String,
+                               each: Double => Unit = _ => ()): Timing = {
+    def run(): Double = {
+      val sec = runOnce(spark, name, dir)
+      each(sec)
+      sec
+    }
+    val cold = run()
+    // drop the previous query's broadcast/cache garbage so each
+    // measurement sees a clean heap, not its predecessor's GC debt
+    spark.catalog.clearCache()
+    System.gc()
+    val warm = Seq.fill(3)(run())
+    val sorted = warm.sorted
+    Timing(sorted(sorted.length / 2), sorted.head, sorted.last - sorted.head, cold +: warm)
+  }
+
+  /** `{"k":v,…}` with three decimals: the artifact's number maps. */
+  private[graft] def json(vals: collection.Seq[(String, Double)]): String =
+    vals.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+
   /** Spawn [[BenchScale]] in a fresh JVM (same java, same classpath,
     * same JVM options — read off this process) and parse its one JSON
     * line into (raw scale_step object, ratio pairs). None on any
@@ -298,49 +349,14 @@ object Bench {
     // their operators and only spam the bench tail here.
     spark.sparkContext.setLogLevel("ERROR")
 
-    def time(fn: => Unit): Double = {
-      val t0 = System.nanoTime(); fn; (System.nanoTime() - t0) / 1e9
+    // load sentinel (VERDICT r11 #3): fixed-cost probe + loadavg
+    // recorded beside every entry so the artifact self-reports its
+    // noise level (see [[BenchSentinel]])
+    def benchOne(name: String, dir: String): Timing = {
+      val t = timeQuery(spark, name, dir)
+      BenchSentinel.record(spark, name)
+      t
     }
-
-    // Full materialization: a bare .count() lets Catalyst prune the
-    // projected expressions (and drop final sorts) under
-    // Aggregate(count(1)), so pure-projection queries would report the
-    // scan, not the work. The noop sink evaluates every output column.
-    def materialize(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    // iters holds every measurement in RUN ORDER (cold first, then
-    // the warm runs) so run-over-run degradation inside one JVM —
-    // the r7 g_clustering pathology — is visible in the artifact
-    // itself rather than inferred from cross-block comparisons
-    case class Timing(median: Double, min: Double, spread: Double,
-                      iters: Seq[Double])
-
-    def benchOne(name: String, dir: String, warmRuns: Int): Option[Timing] =
-      SparkEntry.queries.get(name).map { fn =>
-        // drop cross-entry shared artifacts (the G2/G8 memoized
-        // triangle stream) before EVERY timed run: the bench grades
-        // the full pipeline at each scale, not memo reuse — otherwise
-        // the scale-step ratio of a shared-pass operator would measure
-        // cache-hit arithmetic and read as fake sub-linearity
-        def run(): Double = {
-          graft.operators.Graph.dropSharedCache(spark)
-          time(materialize(fn(spark, dir)))
-        }
-        val cold = run() // cold: codegen + listing
-        // drop the previous query's broadcast/cache garbage so each
-        // measurement sees a clean heap, not its predecessor's GC debt
-        spark.catalog.clearCache()
-        System.gc()
-        val warm = Seq.fill(warmRuns)(run())
-        // load sentinel (VERDICT r11 #3): fixed-cost probe + loadavg
-        // recorded beside every entry so the artifact self-reports
-        // its noise level (see [[BenchSentinel]])
-        BenchSentinel.record(spark, name)
-        val sorted = warm.sorted
-        Timing(sorted(sorted.length / 2), sorted.head,
-          sorted.last - sorted.head, cold +: warm)
-      }
 
     // Wall-clock budget (VERDICT r12 #1, tightened r14 #1): BENCH_r12/
     // r13 came back rc 124 / parsed null — r12 because the summary
@@ -372,8 +388,6 @@ object Bench {
       System.err.flush()
     }
 
-    def json(vals: collection.Seq[(String, Double)]): String =
-      vals.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     def jsonField(rs: collection.Seq[(String, Timing)], f: Timing => Double): String =
       json(rs.map { case (k, t) => k -> f(t) })
 
@@ -384,7 +398,7 @@ object Bench {
     def total: Double = results.map(_._2.median).sum
 
     // Per-job fixed-cost probe (the second calibration channel — see
-    // [[ProfileJobCost]]): measured right after the skeleton emission
+    // [[BenchSentinel.measure]]): measured right after the skeleton emission
     // so it rides in every later line; sweep/iterative entry deltas
     // are then adjudicated against it in-artifact (jobs ×
     // per-job-cost) instead of via a separate runMain after the fact.
@@ -420,7 +434,7 @@ object Bench {
     // driver kill from here on always finds a parseable contract line
     emit(Seq.empty, "")
     heartbeat("session up, skeleton emitted; measuring job cost")
-    val (jobCostMs, aggCostMs) = ProfileJobCost.measure(spark, nTrivial = 30, nAgg = 8)
+    val (jobCostMs, aggCostMs) = BenchSentinel.measure(spark, nTrivial = 30, nAgg = 8)
     jobCostJson = f""","job_cost":{"trivial_ms":$jobCostMs%.2f,"agg32_ms":$aggCostMs%.2f}"""
     emit(Seq.empty, "")
     heartbeat(f"job cost measured (trivial $jobCostMs%.1f ms); headline starts")
@@ -438,7 +452,8 @@ object Bench {
     // headline: re-emit the contract line after EVERY entry (r14 #1)
     knownHeadline.foreach { n =>
       if (overBudget) truncatedEntries += n
-      else benchOne(n, sfDir, warmRuns = 3).foreach { t =>
+      else {
+        val t = benchOne(n, sfDir)
         results += (n -> t)
         heartbeat(f"headline ${results.size}/${knownHeadline.size} $n median=${t.median}%.3f")
         emit(Seq.empty, s""","headline_done":${results.size},"headline_n":${knownHeadline.size}""")
@@ -452,18 +467,12 @@ object Bench {
     emit(headlineBlock, "")
     heartbeat(s"headline block done (${results.size}/${headline.size})")
 
-    def bench(names: Seq[String], dir: String, warmRuns: Int = 3,
-              budgeted: Boolean = false): Seq[(String, Timing)] =
-      names.flatMap { n =>
-        if (budgeted && overBudget) { truncatedEntries += n; None }
-        else benchOne(n, dir, warmRuns).map(n -> _)
-      }
-
     val ext = scala.collection.mutable.ArrayBuffer[(String, Timing)]()
     def extTotalJson = f""","extended_total":${ext.map(_._2.median).sum}%.3f"""
     knownExtended.foreach { n =>
       if (overBudget) truncatedEntries += n
-      else benchOne(n, sfDir, warmRuns = 3).foreach { t =>
+      else {
+        val t = benchOne(n, sfDir)
         ext += (n -> t)
         heartbeat(f"extended ${ext.size}/${knownExtended.size} $n median=${t.median}%.3f")
         if (ext.size % 10 == 0)
@@ -496,7 +505,10 @@ object Bench {
           val factor = 10
           val scaledDir = ensureScaled(spark, sfDir, factor)
           val baseline = (results ++ ext).toMap
-          val scaled = bench(scaleStep, scaledDir, warmRuns = 3, budgeted = true)
+          val scaled = scaleStep.filter(SparkEntry.queries.contains).flatMap { n =>
+            if (overBudget) { truncatedEntries += n; None }
+            else Some(n -> benchOne(n, scaledDir))
+          }
           val ratios = scaled.flatMap { case (n, t) =>
             baseline.get(n).map(b => n -> t.median / math.max(b.median, 1e-9)) }
           val complete = scaled.size == scaleStep.count(SparkEntry.queries.contains)

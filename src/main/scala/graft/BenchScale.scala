@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import Bench.json
 
 /** The scale-step block as its OWN main, run in a FRESH JVM
   * (spawned by [[Bench]], or standalone:
@@ -10,10 +10,10 @@ import org.apache.spark.sql.DataFrame
   * showed session-tail step ratios of 10–15× for operators whose
   * isolated two-decade runs measure 5–7× — accumulated JVM/GC/broadcast
   * debt from the ~100-entry bench session ahead of the block, not
-  * super-linear work (r9/r10 "What's wrong" #1; ProfileScale100 was the
-  * manual evidence). Running BOTH decades (1× and `factor`×) in one
-  * fresh JVM makes the committed ratio an isolated measurement by
-  * construction — same methodology, now structural.
+  * super-linear work (r9/r10 "What's wrong" #1). Running BOTH decades
+  * (1× and `factor`×) in one fresh JVM makes the committed ratio an
+  * isolated measurement by construction — same methodology, now
+  * structural.
   *
   * Prints ONE JSON line: `{"factor":N,"isolated":true,"base":{1×
   * medians},"queries":{N× medians},"ratio":{N×/1×},"total":sec,
@@ -46,26 +46,6 @@ object BenchScale {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    def time(fn: => Unit): Double = {
-      val t0 = System.nanoTime(); fn; (System.nanoTime() - t0) / 1e9
-    }
-    def materialize(df: DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-
-    case class Timing(median: Double, iters: Seq[Double])
-    def benchOne(name: String, dir: String): Timing = {
-      val fn = SparkEntry.queries(name)
-      def one(): Double = {
-        graft.operators.Graph.dropSharedCache(spark)
-        time(materialize(fn(spark, dir)))
-      }
-      val cold = one()
-      spark.catalog.clearCache()
-      System.gc()
-      val warm = Seq.fill(3)(one())
-      Timing(warm.sorted.apply(warm.length / 2), cold +: warm)
-    }
-
     val scaledDir = Bench.ensureScaled(spark, sfDir, factor)
     // interleave decades per query (1× immediately before its N×) so
     // any residual drift biases the RATIO as little as possible; the
@@ -78,9 +58,9 @@ object BenchScale {
     val rows = Bench.scaleStep.flatMap { n =>
       if (overBudget) { truncated += n; None }
       else {
-        val base = benchOne(n, sfDir)
+        val base = Bench.timeQuery(spark, n, sfDir)
         BenchSentinel.record(spark, s"$n@1x")
-        val big = benchOne(n, scaledDir)
+        val big = Bench.timeQuery(spark, n, scaledDir)
         BenchSentinel.record(spark, s"$n@${factor}x")
         Some((n, base, big))
       }
@@ -90,15 +70,13 @@ object BenchScale {
       else s""","truncated_n":${truncated.size},"truncated_first":${
         truncated.take(3).map("\"" + _ + "\"").mkString("[", ",", "]")}"""
     val completeJson = s""","complete":${truncated.isEmpty}"""
-    def jsonPre(vals: Seq[(String, Double)]): String =
-      vals.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     // PRELIMINARY emission before the (un-budgeted) work-mass passes:
     // the parent parses the LAST JSON line, so a kill during work-mass
     // still leaves every finished timing on stdout instead of voiding
     // the whole block — the same emit-before-risky-work contract the
     // r14 #1 bench fix established (review pass 3, round 14)
     realOut.println(
-      f"""{"factor":$factor,"isolated":true$completeJson,"base":${jsonPre(rows.map(r => r._1 -> r._2.median))},"queries":${jsonPre(rows.map(r => r._1 -> r._3.median))},"ratio":${jsonPre(rows.map(r => r._1 -> r._3.median / math.max(r._2.median, 1e-9)))},"total":${rows.map(_._3.median).sum}%.3f$truncJson,"work_pending":true}""")
+      f"""{"factor":$factor,"isolated":true$completeJson,"base":${json(rows.map(r => r._1 -> r._2.median))},"queries":${json(rows.map(r => r._1 -> r._3.median))},"ratio":${json(rows.map(r => r._1 -> r._3.median / math.max(r._2.median, 1e-9)))},"total":${rows.map(_._3.median).sum}%.3f$truncJson,"work_pending":true}""")
     realOut.flush()
     // WORK-MASS channel (VERDICT r14 #3): operator-independent work
     // units at both decades — triangles for the parts-graph family,
@@ -110,8 +88,6 @@ object BenchScale {
     // dropped) so it never contaminates a timing. Skipped (honestly —
     // the preliminary line above stays as the artifact) when the
     // parent's budget is already exceeded.
-    def json(vals: Seq[(String, Double)]): String =
-      vals.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     if (overBudget) { spark.stop(); return }
     graft.operators.Graph.dropSharedCache(spark)
     val workBase = graft.operators.Graph.workMass(spark, sfDir)

@@ -43,6 +43,13 @@ import org.apache.spark.sql.SparkSession
   *     listener threads' CPU was the same for all three (+0.02 s a pass
   *     for the trimming).
   *     A session that turns the UI on can raise them with `.config`.
+  *
+  * Precondition for the codegen cache: Spark reads
+  * `spark.sql.codegen.cache.maxEntries` once per JVM, when the JVM
+  * first generates code. The 1000-entry cap takes effect only if a
+  * session built here is active at that moment; if any code was
+  * generated before, the cache stays at Spark's 100 for the life of the
+  * JVM. Build the session before any other Spark call.
   */
 object GraftSession {
   def builder(

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.Tables
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ParquetRead
+import org.apache.spark.sql.graft.{ParquetRead, QueryCost}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.nio.file.Files
@@ -34,10 +34,10 @@ import java.nio.file.Files
   */
 object StreamBench {
 
-  /** `jobs` = Spark jobs launched by the MEDIAN-time run (a counting
-    * listener bracketed by listener-bus drains, so the count is exact
-    * for the run's wall window). The adjudication channel VERDICT r13
-    * #7 asked for: a micro-batched stateful query's wall time on a
+  /** `jobs` = Spark jobs launched by the MEDIAN-time run (counted by
+    * [[QueryCost]], so the count is exact for the run's wall window).
+    * The adjudication channel VERDICT r13 #7 asked for: a
+    * micro-batched stateful query's wall time on a
     * slow-dispatch box is dominated by jobs × per-job cost (source
     * listing + per-partition state commits per batch), so the artifact
     * must carry the job count beside the seconds for the arithmetic to
@@ -48,20 +48,13 @@ object StreamBench {
     def eventsPerSec: Double = events / math.max(sec, 1e-9)
   }
 
-  private class JobCounter extends org.apache.spark.scheduler.SparkListener {
-    val jobs = new java.util.concurrent.atomic.AtomicLong()
-    override def onJobStart(
-        jobStart: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-      jobs.incrementAndGet()
-  }
-
   private val nFiles = 16
   private val filesPerTrigger = 2
 
   /** The interval join runs with LARGER micro-batches (4 files → 4
-    * batches instead of 8). Profiled r9 (ProfileJoinInterval, sf0.1,
-    * 200k events): its wall time is a per-batch FLOOR of ~0.9-1.0 s
-    * that barely moves with shuffle partitions (sp=4/8/16 → 7.4/8.0/
+    * batches instead of 8). Profiled r9 (sf0.1, 200k events): its
+    * wall time is a per-batch FLOOR of ~0.9-1.0 s that barely moves
+    * with shuffle partitions (sp=4/8/16 → 7.4/8.0/
     * 11.6 s) or provider (RocksDB + single-store join stateFormat v3
     * → 6.9 s), because a stream-stream join commits FOUR state stores
     * per partition per batch plus two source scans — ~2 s of summed
@@ -98,11 +91,6 @@ object StreamBench {
     val spKey = "spark.sql.shuffle.partitions"
     val priorSp = spark.conf.get(spKey)
     spark.conf.set(spKey, statePartitions.toString)
-    // registered here so the finally below removes it on ANY exit —
-    // a mid-run failure must not leak a listener onto the long-lived
-    // shared session (review pass 1, round 14)
-    val counter = new JobCounter
-    spark.sparkContext.addSparkListener(counter)
     try {
       val raw = Tables.eventsTsAsNanosLong(spark, dir)
       val maxId = raw.agg(max("event_id")).head.getLong(0) + 1
@@ -194,23 +182,19 @@ object StreamBench {
       def timeOnce(name: String): (Double, Long) = {
         val (df, mode) = pipeline(name)
         val ckpt = base.toString + s"/ckpt_${name}_${System.nanoTime()}"
-        // drain + snapshot the job counter so the count covers exactly
-        // this run's window (the bus is async)
-        org.apache.spark.sql.graft.ListenerBusDrain.drain(spark.sparkContext)
-        val jobs0 = counter.jobs.get()
-        val t0 = System.nanoTime()
-        val q = df.writeStream
-          .format("noop")
-          .outputMode(mode)
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val sec = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.sql.graft.ListenerBusDrain.drain(spark.sparkContext)
-        val jobs = counter.jobs.get() - jobs0
+        val (sec, cost) = QueryCost.of(spark) {
+          val t0 = System.nanoTime()
+          val q = df.writeStream
+            .format("noop")
+            .outputMode(mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+          (System.nanoTime() - t0) / 1e9
+        }
         org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-        (sec, jobs)
+        (sec, cost.jobs.size.toLong)
       }
 
       def bench(name: String): Entry = {
@@ -242,7 +226,6 @@ object StreamBench {
         }
       plain :+ tws
     } finally {
-      spark.sparkContext.removeSparkListener(counter)
       spark.conf.set(spKey, priorSp)
       org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
     }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointIds
+import org.apache.spark.sql.graft.{CheckpointIds, QueryCost}
 
 import graft.operators.{Dedup, Graph, Similarity}
 
@@ -138,21 +138,12 @@ class CheckpointScopeSpec extends SparkSpec {
   }
 
   test("embCoreset checkpoints its distances only while another round reads them") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      Similarity.embCoreset(spark, sfDir, k = 4).collect()
-      org.apache.spark.graft.TestListenerBus.drain(spark.sparkContext)
-      // k = 4 runs 3 rounds and 3 checkpoints: the seed's distances and
-      // rounds 1–2's, each materialized by the one job that measures
-      // its size. Checkpointing round 3's distances too, which nothing
-      // reads, took 17 jobs; inferring the embeddings' schema with a
-      // job of its own, 16.
-      assert(jobs.get() == 15, s"embCoreset(k = 4) ran ${jobs.get()} jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (_, cost) = QueryCost.of(spark)(Similarity.embCoreset(spark, sfDir, k = 4).collect())
+    // k = 4 runs 3 rounds and 3 checkpoints: the seed's distances and
+    // rounds 1–2's, each materialized by the one job that measures its
+    // size. Checkpointing round 3's distances too, which nothing reads,
+    // took 17 jobs; inferring the embeddings' schema with a job of its
+    // own, 16.
+    assert(cost.jobs.size == 15, s"embCoreset(k = 4) ran ${cost.jobs.size} jobs")
   }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointIds
+import org.apache.spark.sql.graft.{CheckpointIds, QueryCost}
 
 import graft.operators.{Dedup, Graph}
 
@@ -19,21 +19,6 @@ import graft.operators.{Dedup, Graph}
   * node-sized state broadcasts at plan time.
   */
 class CheckpointStatsSpec extends SparkSpec {
-
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.graft.TestListenerBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      org.apache.spark.graft.TestListenerBus.drain(spark.sparkContext)
-      (out, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   private def stats(df: DataFrame) = df.queryExecution.optimizedPlan.stats
 
@@ -101,8 +86,8 @@ class CheckpointStatsSpec extends SparkSpec {
         .flatMap { case h: HashPartitioning => h.references.map(_.name) }
       assert(keys == Seq("dst"), plan.treeString)
       // broadcast of the ranks, the sum's map stage, the checkpoint's job
-      val (next, jobs) = jobsOf(cp(round))
-      assert(jobs == 3, s"one checkpointed round ran $jobs jobs")
+      val (next, cost) = QueryCost.of(spark)(cp(round))
+      assert(cost.jobs.size == 3, s"one checkpointed round ran ${cost.jobs.size} jobs")
       assert(next.count() == 160L)
     }
   }

@@ -1,17 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ParquetRead
+import org.apache.spark.sql.graft.{ParquetRead, QueryCost}
 import org.apache.spark.sql.types.LongType
 
 import graft.sinks.TableStore
@@ -26,29 +23,13 @@ class ParquetReadSpec extends SparkSpec {
 
   private lazy val tmp = Files.createTempDirectory("graft_parquet_read").toString
 
-  /** `body`'s value and the jobs it started. */
-  private def jobsIn[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    org.apache.spark.graft.TestListenerBus.drain(sc)
-    val n = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      org.apache.spark.graft.TestListenerBus.drain(sc)
-      (r, n.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
   private def assertSameRead(paths: String*): DataFrame = {
-    val (ours, jobs) = jobsIn(ParquetRead(spark, paths: _*))
-    assert(jobs == 0, s"the footer read of ${paths.mkString(", ")} ran $jobs jobs")
-    val (theirs, sparkJobs) = jobsIn(spark.read.parquet(paths: _*))
-    assert(sparkJobs >= 1, "Spark's reader infers the schema with a job; without it " +
+    val (ours, cost) = QueryCost.of(spark)(ParquetRead(spark, paths: _*))
+    assert(cost.jobs.isEmpty, s"the footer read of ${paths.mkString(", ")} ran ${cost.jobs.size} jobs")
+    val (theirs, sparkCost) = QueryCost.of(spark)(spark.read.parquet(paths: _*))
+    assert(sparkCost.jobs.nonEmpty, "Spark's reader infers the schema with a job; without it " +
       "the check above is vacuous")
     assert(ours.schema == theirs.schema)
     assert(ours.schema.json == theirs.schema.json, "field metadata differs")

@@ -1,8 +1,8 @@
 package graft
 
 import graft.queries.TextQueries
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.QueryCost
 
 /** Round-6 specs: the incremental BPE trainer at real vocab sizes.
   *
@@ -99,20 +99,12 @@ class Round10Spec extends SparkSpec {
   }
 
   test("BPE Spark job count is O(1) in nMerges") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val merges = TextQueries.textBpe(spark, sfDir, nMerges = 512).collect()
-      org.apache.spark.graft.TestListenerBus.drain(spark.sparkContext)
-      // the round-5 loop ran >= 3 jobs PER MERGE (1536+ here); the
-      // rewrite runs the type aggregate + the result collect only —
-      // a generous ceiling still catches any per-merge job creep
-      assert(jobs.get() <= 16, s"jobs=${jobs.get()} for ${merges.length} merges")
-      assert(merges.length > 64, s"only ${merges.length} merges learned")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (merges, cost) = QueryCost.of(spark)(TextQueries.textBpe(spark, sfDir, nMerges = 512).collect())
+    // the round-5 loop ran >= 3 jobs PER MERGE (1536+ here); the
+    // rewrite runs the type aggregate + the result collect only — a
+    // generous ceiling still catches any per-merge job creep
+    assert(cost.jobs.size <= 16, s"jobs=${cost.jobs.size} for ${merges.length} merges")
+    assert(merges.length > 64, s"only ${merges.length} merges learned")
   }
 
   // ---- sink_merge: CDC MERGE with deletes ----

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.graft.{TestListenerBus, TestStatusStore}
+import org.apache.spark.graft.TestStatusStore
+import org.apache.spark.sql.graft.QueryCost
 import org.scalatest.concurrent.Eventually
 import org.scalatest.time.{Seconds, Span}
 
@@ -21,7 +22,7 @@ class StatusStoreSpec extends SparkSpec with Eventually {
     // each query is one SQL execution of at least one job and stage
     val queries = 3 * Seq(caps.jobs, caps.stages, caps.executions).max
     (1 to queries).foreach(i => spark.range(0, 100, 1, 2).selectExpr(s"sum(id + $i)").collect())
-    TestListenerBus.drain(sc)
+    QueryCost.drain(sc)
     // the store trims itself on a background thread after the writes
     eventually(timeout(Span(30, Seconds))) {
       val held = TestStatusStore.completed(sc)
