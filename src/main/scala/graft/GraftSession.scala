@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import scala.util.Try
+
 /** Tuned SparkSession factory for the graft engine.
   *
   * Every knob here is chosen for the 100 TB / many-executor target and
@@ -93,6 +95,47 @@ object GraftSession {
       // class retains ~23 KB of heap, so a full cache is ~23 MB.
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.codegen.useIdInClassName", "false")
+
+  /** Run `body` with `settings` on the session's conf, then hand the
+    * conf back as it was. The keys are set inside the scope, so a
+    * `set` that throws (a static key) still restores the keys set
+    * before it. On exit each key set here goes back to its prior
+    * value, or is unset when it had none; a key that only held its
+    * default counts as unset, since `getOption` would read the
+    * default back as if it were set. The body's exception propagates
+    * with any restore failure added as suppressed.
+    *
+    * Spark reads the conf when it optimizes and runs a plan, not when
+    * the frame is built: a result that must run under the settings
+    * has to be materialized inside `body` (`collect`,
+    * `localCheckpoint`, a finished stream). The conf is the session's,
+    * so a query running concurrently in the same session sees the
+    * settings too.
+    */
+  def withConf[T](spark: SparkSession, settings: (String, String)*)(body: => T): T = {
+    val conf = spark.conf
+    val explicit = conf.getAll
+    val prior = settings.map { case (k, _) => k -> explicit.get(k) }
+    var applied = 0
+    // puts back every key set so far, and returns what failed
+    def restore(): Seq[Throwable] =
+      prior.take(applied).reverse.flatMap { case (k, v) =>
+        Try(v.fold(conf.unset(k))(conf.set(k, _))).failed.toOption
+      }
+    val result = try {
+      settings.foreach { case (k, v) => conf.set(k, v); applied += 1 }
+      body
+    } catch {
+      case e: Throwable =>
+        // the body's exception is the one that propagates
+        restore().foreach(e.addSuppressed)
+        throw e
+    }
+    restore() match {
+      case Seq() => result
+      case first +: rest => rest.foreach(first.addSuppressed); throw first
+    }
+  }
 
   def getOrCreate(): SparkSession = {
     val s = builder().getOrCreate()

@@ -1214,19 +1214,6 @@ object Similarity {
       .orderBy("label")
   }
 
-  /** A21: LSH tuning-curve sweep — the sizing study run BEFORE
-    * committing a 100 TB corpus to an index configuration (A17's
-    * evaluation pattern applied to A2): for each table count, the
-    * measured recall of [[lshAnn]] against the exact [[bruteForceTopK]]
-    * ranking, computed entirely in-plan (one join of the approximate
-    * and exact top-k sets per setting, counted — no driver-side
-    * comparisons). Recall rises with tables while candidate cost
-    * rises linearly: the curve is the evidence for choosing a point
-    * on that trade-off, which is otherwise folklore. Probabilistic
-    * content (LSH buckets) → rows-only driver check; the spec pins
-    * monotonicity and the top setting's recall floor, and records
-    * every point in RECALL.
-    */
   /** A26: IVF nprobe tuning-curve sweep — A21's emit-the-decision-as-
     * data pattern applied to the SECOND index family: measured recall
     * vs `nprobe` (the probed-cell count), the one dial every IVF
@@ -1262,6 +1249,19 @@ object Similarity {
     curves.reduce(_ unionByName _).orderBy("nprobe")
   }
 
+  /** A21: LSH tuning-curve sweep — the sizing study run BEFORE
+    * committing a 100 TB corpus to an index configuration (A17's
+    * evaluation pattern applied to A2): for each table count, the
+    * measured recall of [[lshAnn]] against the exact [[bruteForceTopK]]
+    * ranking, computed entirely in-plan (one join of the approximate
+    * and exact top-k sets per setting, counted — no driver-side
+    * comparisons). Recall rises with tables while candidate cost
+    * rises linearly: the curve is the evidence for choosing a point
+    * on that trade-off, which is otherwise folklore. Probabilistic
+    * content (LSH buckets) → rows-only driver check; the spec pins
+    * monotonicity and the top setting's recall floor, and records
+    * every point in RECALL.
+    */
   def lshSweep(spark: SparkSession, dir: String,
                k: Int = 5, nQueries: Int = 10,
                tableCounts: Seq[Int] = Seq(4, 8, 16)): DataFrame = {

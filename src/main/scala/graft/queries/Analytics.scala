@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.functions.Aggregators
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -775,8 +775,8 @@ object Analytics {
     * aggregate matches the plain-join oracle — proof the
     * split-and-replicate rewrite changed the schedule, not the answer.
     */
-  def qAqeSkew(spark: SparkSession, dir: String): DataFrame = {
-    val tuned = Map(
+  def qAqeSkew(spark: SparkSession, dir: String): DataFrame =
+    GraftSession.withConf(spark,
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       // a terminal aggregate rides the join's partitioning, so the
       // split adds one (tiny) extra shuffle — force accepts that
@@ -784,10 +784,7 @@ object Analytics {
       "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8k",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8k")
-    val saved = tuned.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    tuned.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8k") {
       // both join inputs staged to parquet: (a) the rule only matches
       // Sort-over-bare-ShuffleQueryStage children (a dim-side final
       // aggregate between them defeats it), and (b) AQE splits a
@@ -822,11 +819,7 @@ object Analytics {
       val skewHandled = joined.queryExecution.executedPlan.toString
         .contains("skew=true")
       snapped.withColumn("skew_handled", lit(skewHandled)).orderBy("k")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
-  }
 
   /** T27: equal-frequency quantile binning — discretize a continuous
     * measure into deciles fit from its OWN distribution (the
@@ -1466,17 +1459,13 @@ object Analytics {
     * (Round16Spec checks the might_contain lands and that the result
     * equals the un-rewritten join).
     *
-    * Conf discipline: the rewrite is opt-in via
-    * `spark.graft.bloomJoinPushdown`; the flag is scoped to THIS
-    * query by eager materialization before the finally restores it
-    * (the E18 pattern), so no other registry entry's plan changes.
+    * The rewrite is opt-in via `spark.graft.bloomJoinPushdown`; the
+    * result is materialized while the flag is on, so no other
+    * registry entry's plan changes.
     */
   def qBloomJoinRule(spark: SparkSession, dir: String): DataFrame = {
     org.apache.spark.sql.graft.BloomJoinRewrite.ensure(spark)
-    val flag = "spark.graft.bloomJoinPushdown"
-    val prior = spark.conf.getOption(flag)
-    spark.conf.set(flag, "true")
-    try {
+    GraftSession.withConf(spark, "spark.graft.bloomJoinPushdown" -> "true") {
       val dim = Tables.load(spark, dir, "customer")
         .filter(col("c_acctbal") > 9000).select("c_custkey")
       Tables.load(spark, dir, "orders")
@@ -1485,11 +1474,6 @@ object Analytics {
         .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
         .orderBy("o_orderstatus")
         .localCheckpoint() // eager: the plan optimizes while the flag is on
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(flag, v)
-        case None    => spark.conf.unset(flag)
-      }
     }
   }
 
@@ -1506,8 +1490,8 @@ object Analytics {
     * this one whole subtrees via Catalyst's own `sameResult`
     * exact-match machinery.
     *
-    * Conf discipline: opt-in `spark.graft.mvRewrite`, scoped to this
-    * query by eager materialization (the Q50/E18 pattern). The spec
+    * Opt-in via `spark.graft.mvRewrite`, scoped to this query by
+    * eager materialization, as in Q50. The spec
     * (Round17Spec) pins what the oracle can't see: the rewritten plan
     * reads the MV files and NOT the orders table, parity with the
     * flag off, and a non-matching query left untouched.
@@ -1521,20 +1505,13 @@ object Analytics {
     val base = java.nio.file.Files.createTempDirectory("graft_mv")
     MvRewrite.register(spark, "orders_monthly", monthly,
       base.toString + "/orders_monthly")
-    val flag = "spark.graft.mvRewrite"
-    val prior = spark.conf.getOption(flag)
-    spark.conf.set(flag, "true")
-    try
+    try GraftSession.withConf(spark, "spark.graft.mvRewrite" -> "true") {
       // the consumer writes the plain fact-table aggregate — the MV
       // substitution is the optimizer's business, not the author's
       monthly
         .orderBy("month")
         .localCheckpoint() // eager: the plan optimizes while the flag is on
-    finally {
-      prior match {
-        case Some(v) => spark.conf.set(flag, v)
-        case None    => spark.conf.unset(flag)
-      }
+    } finally {
       // the result is checkpointed — the MV copy and its registration
       // are scoped to this call (repeat bench runs must not pile up
       // tmp parquet or serve a stale registration)
@@ -1570,10 +1547,7 @@ object Analytics {
     val base = java.nio.file.Files.createTempDirectory("graft_mv_rollup")
     MvRewrite.register(spark, "orders_daily", daily,
       base.toString + "/orders_daily")
-    val flag = "spark.graft.mvRewrite"
-    val prior = spark.conf.getOption(flag)
-    spark.conf.set(flag, "true")
-    try
+    try GraftSession.withConf(spark, "spark.graft.mvRewrite" -> "true") {
       // the consumer writes the plain MONTHLY fact-table aggregate —
       // the rollup substitution is the optimizer's business
       orders
@@ -1582,11 +1556,7 @@ object Analytics {
           max("o_totalprice").as("mx"))
         .orderBy("month")
         .localCheckpoint() // eager: the plan optimizes while the flag is on
-    finally {
-      prior match {
-        case Some(v) => spark.conf.set(flag, v)
-        case None    => spark.conf.unset(flag)
-      }
+    } finally {
       MvRewrite.clear(spark)
       org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
     }

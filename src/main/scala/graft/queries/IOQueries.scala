@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.sinks.TableStore
 import graft.sources.{FvecsIO, Ingest}
 import org.apache.hadoop.fs.Path
@@ -1401,14 +1401,10 @@ object IOQueries {
           r.relation.table.name()
       }).map(_.split('.').last)
     val defaultOrder = leafOrder()
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    val (cboOrder, result) =
-      try (leafOrder(), spark.sql(q).collect())
-      finally {
-        spark.conf.set("spark.sql.cbo.enabled", "false")
-        spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-      }
+    val (cboOrder, result) = GraftSession.withConf(spark,
+        "spark.sql.cbo.enabled" -> "true", "spark.sql.cbo.joinReorder.enabled" -> "true") {
+      (leafOrder(), spark.sql(q).collect())
+    }
     val reordered =
       cboOrder.indexOf("cbo_dim_be") < cboOrder.indexOf("cbo_dim_ae") &&
         defaultOrder.indexOf("cbo_dim_be") > defaultOrder.indexOf("cbo_dim_ae")
@@ -1663,11 +1659,10 @@ object IOQueries {
     val actual = spark.sql(
       "SELECT count(*) FROM graft.lake.histo_t WHERE x > 500").head.getLong(0)
     val totalRows = spark.table("graft.lake.histo_t").count()
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    val est =
-      try spark.table("graft.lake.histo_t").where("x > 500")
+    val est = GraftSession.withConf(spark, "spark.sql.cbo.enabled" -> "true") {
+      spark.table("graft.lake.histo_t").where("x > 500")
         .queryExecution.optimizedPlan.stats.rowCount.map(_.toLong)
-      finally spark.conf.set("spark.sql.cbo.enabled", "false")
+    }
     // uniform-over-[min,max] interpolation would estimate ~half the
     // table; the histogram estimate must track the skewed actual
     val uniformEst = totalRows / 2
@@ -1736,20 +1731,17 @@ object IOQueries {
       st.sizeInBytes.getAsLong < rawBytes * 3 / 4 &&
       st.sizeInBytes.getAsLong > rawBytes / 4
     // the broadcast law: threshold strictly between adjusted and raw
-    val thrKey = "spark.sql.autoBroadcastJoinThreshold"
-    val prior = spark.conf.get(thrKey)
-    spark.conf.set(thrKey, (rawBytes * 3 / 4).toString)
-    val (staticBroadcast, joined) =
-      try {
-        val j = spark.sql(
-          """SELECT c_nationkey AS grp, count(*) AS n,
-            |  round(sum(o_totalprice), 2) AS total
-            |FROM smor_fact_src f JOIN graft.lake.smor_dim d
-            |  ON f.o_custkey = d.c_custkey
-            |GROUP BY c_nationkey""".stripMargin)
-        (j.queryExecution.sparkPlan.toString.contains("BroadcastHashJoin"),
-          j.collect())
-      } finally spark.conf.set(thrKey, prior)
+    val (staticBroadcast, joined) = GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> (rawBytes * 3 / 4).toString) {
+      val j = spark.sql(
+        """SELECT c_nationkey AS grp, count(*) AS n,
+          |  round(sum(o_totalprice), 2) AS total
+          |FROM smor_fact_src f JOIN graft.lake.smor_dim d
+          |  ON f.o_custkey = d.c_custkey
+          |GROUP BY c_nationkey""".stripMargin)
+      (j.queryExecution.sparkPlan.toString.contains("BroadcastHashJoin"),
+        j.collect())
+    }
     val ok = if (rowsOk && bytesAdjusted && staticBroadcast) 1.0 else 0.0
     import spark.implicits._
     joined.map(r => (r.getInt(0).toString, r.getLong(1), r.getDouble(2)))
@@ -1796,11 +1788,10 @@ object IOQueries {
       "SELECT count(*) FROM graft.lake.histod_t WHERE d > DATE'2024-07-01'")
       .head.getLong(0)
     val totalRows = spark.table("graft.lake.histod_t").count()
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    val est =
-      try spark.table("graft.lake.histod_t").where("d > DATE'2024-07-01'")
+    val est = GraftSession.withConf(spark, "spark.sql.cbo.enabled" -> "true") {
+      spark.table("graft.lake.histod_t").where("d > DATE'2024-07-01'")
         .queryExecution.optimizedPlan.stats.rowCount.map(_.toLong)
-      finally spark.conf.set("spark.sql.cbo.enabled", "false")
+    }
     // uniform over [2024-01-01, 2024-12-30] puts ~half the table past
     // midyear; the day-binned histogram must track the ~5% actual
     val uniformEst = totalRows / 2
@@ -2041,9 +2032,6 @@ object IOQueries {
     */
   def sinkCatalogBucketed(spark: SparkSession, dir: String): DataFrame = {
     ensureCatalog(spark)
-    val bucketingKey = "spark.sql.sources.v2.bucketing.enabled"
-    val prevBucketing = spark.conf.getOption(bucketingKey)
-    spark.conf.set(bucketingKey, "true")
     Tables.load(spark, dir, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
       .createOrReplaceTempView("orders_bkt_src")
@@ -2062,9 +2050,9 @@ object IOQueries {
         |PARTITIONED BY (bucket(8, c_custkey))""".stripMargin)
     spark.sql("INSERT INTO graft.lake.orders_bkt SELECT * FROM orders_bkt_src")
     spark.sql("INSERT INTO graft.lake.customer_bkt SELECT * FROM customer_bkt_src")
-    val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    GraftSession.withConf(spark,
+        "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // materialize under the no-broadcast conf so the executed join
       // is the storage-partitioned one the operator exists to prove
       spark.sql(
@@ -2074,13 +2062,6 @@ object IOQueries {
           |JOIN graft.lake.customer_bkt c ON o.o_custkey = c.c_custkey
           |GROUP BY c_mktsegment
           |ORDER BY c_mktsegment""".stripMargin).localCheckpoint()
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
-      // restore the planner-global flag too — a bench session must not
-      // plan the next ~300 entries under a conf only this one opted
-      // into (review finding, round 10)
-      prevBucketing.fold(spark.conf.unset(bucketingKey))(
-        v => spark.conf.set(bucketingKey, v))
     }
   }
 
@@ -3903,16 +3884,10 @@ object IOQueries {
       .withColumn("month", date_format(col("o_orderdate"), "yyyy-MM"))
       .select("month", "o_orderkey", "o_totalprice")
     orders.write.mode("overwrite").partitionBy("month").parquet(lake)
-    val conf = "spark.sql.sources.partitionOverwriteMode"
-    val saved = spark.conf.getOption(conf)
-    spark.conf.set(conf, "dynamic")
-    try {
+    GraftSession.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       orders.filter(col("month") === fixMonth)
         .withColumn("o_totalprice", round(col("o_totalprice") + 10.0, 2))
         .write.mode("overwrite").partitionBy("month").parquet(lake)
-    } finally saved match {
-      case Some(v) => spark.conf.set(conf, v)
-      case None => spark.conf.unset(conf)
     }
     ParquetRead(spark, lake)
       .groupBy("month")

@@ -1,9 +1,10 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ParquetRead
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.nio.file.Files
@@ -137,14 +138,7 @@ object Events {
       .groupBy(window(col("ts"), "1 hour", "30 minutes").getField("start").as("ws"),
         col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total_value"))
-    val sinkName = s"graft_stream_sliding_${streamCounter.incrementAndGet()}"
-    val q = agg.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+    runToMemory(agg, "graft_stream_sliding", "complete")._1
       .select(unix_micros(col("ws")).as("window_start_us"), col("event_type"),
         col("n"), col("total_value"))
       .orderBy("window_start_us", "event_type")
@@ -173,14 +167,7 @@ object Events {
       col("user_id") === col("c_user") &&
         col("click_ts") <= col("p_ts") &&
         col("click_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES"))
-    val sinkName = s"graft_stream_join_${streamCounter.incrementAndGet()}"
-    val q = joined.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+    runToMemory(joined, "graft_stream_join", "append")._1
       .select(col("user_id"), col("event_id"),
         unix_micros(col("p_ts")).as("purchase_us"),
         unix_micros(col("click_ts")).as("click_us"))
@@ -242,14 +229,7 @@ object Events {
         col("click_ts") <= col("p_ts") &&
         col("click_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES"),
       "leftOuter")
-    val sinkName = s"graft_stream_outer_${streamCounter.incrementAndGet()}"
-    val q = joined.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+    runToMemory(joined, "graft_stream_outer", "append")._1
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("event_id"),
         unix_micros(col("p_ts")).as("purchase_us"),
@@ -300,14 +280,7 @@ object Events {
         col("click_ts") <= col("p_ts") &&
         col("click_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES"),
       "fullOuter")
-    val sinkName = s"graft_stream_fouter_${streamCounter.incrementAndGet()}"
-    val q = joined.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+    runToMemory(joined, "graft_stream_fouter", "append")._1
       .filter(coalesce(col("user_id"), col("c_user")) >= 0)
       .select(coalesce(col("user_id"), col("c_user")).as("user_id"),
         col("event_id"),
@@ -386,14 +359,7 @@ object Events {
       .withColumn("ts", timestamp_micros(expr("ts div 1000")))
       .filter(col("event_type") === "purchase")
     val joined = stream.join(broadcast(userDim), Seq("user_id"))
-    val sinkName = s"graft_stream_enrich_${streamCounter.incrementAndGet()}"
-    val q = joined.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+    runToMemory(joined, "graft_stream_enrich", "append")._1
       .select(col("user_id"), col("event_id"),
         unix_micros(col("ts")).as("ts_us"),
         col("user_events"), col("user_avg_value"))
@@ -434,14 +400,8 @@ object Events {
         array_max(filter(col("click_hist"), v => v <= col("purchase_us"))))
       .select(col("user_id"), col("event_id"), col("purchase_us"), col("click_us"),
         (col("purchase_us") - col("click_us")).as("gap_us"))
-    val sinkName = s"graft_stream_asof_${streamCounter.incrementAndGet()}"
-    val q = joined.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName).orderBy("user_id", "purchase_us", "event_id")
+    runToMemory(joined, "graft_stream_asof", "append")._1
+      .orderBy("user_id", "purchase_us", "event_id")
   }
 
   /** E15: streaming foreachBatch → keyed upsert sink — the
@@ -580,13 +540,13 @@ object Events {
                 Window.partitionBy("user_id").orderBy(col("event_id").desc)))
               .filter(col("rn") === 1).drop("rn")
               .createOrReplaceTempView("e35_batch")
-            s2.conf.set(GraftLakeTable.TxnConfKey, txn)
-            try s2.sql(
-              """MERGE INTO graft.lake.user_state t USING e35_batch s
-                |ON t.user_id = s.user_id
-                |WHEN MATCHED AND s.event_id > t.event_id THEN UPDATE SET *
-                |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-            finally s2.conf.unset(GraftLakeTable.TxnConfKey)
+            GraftSession.withConf(s2, GraftLakeTable.TxnConfKey -> txn) {
+              s2.sql(
+                """MERGE INTO graft.lake.user_state t USING e35_batch s
+                  |ON t.user_id = s.user_id
+                  |WHEN MATCHED AND s.event_id > t.event_id THEN UPDATE SET *
+                  |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+            }
           }
         applyOnce()
         applyOnce() // redelivery: the tag is committed, so this no-ops
@@ -646,13 +606,13 @@ object Events {
                 Window.partitionBy("user_id").orderBy(col("event_id").desc)))
               .filter(col("rn") === 1).drop("rn")
               .createOrReplaceTempView("e37_batch")
-            s2.conf.set(GraftLakeTable.TxnConfKey, txn)
-            try s2.sql(
-              """MERGE INTO graft.lake.user_state_mor t USING e37_batch s
-                |ON t.user_id = s.user_id
-                |WHEN MATCHED AND s.event_id > t.event_id THEN UPDATE SET *
-                |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
-            finally s2.conf.unset(GraftLakeTable.TxnConfKey)
+            GraftSession.withConf(s2, GraftLakeTable.TxnConfKey -> txn) {
+              s2.sql(
+                """MERGE INTO graft.lake.user_state_mor t USING e37_batch s
+                  |ON t.user_id = s.user_id
+                  |WHEN MATCHED AND s.event_id > t.event_id THEN UPDATE SET *
+                  |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+            }
           }
         applyOnce()
         applyOnce() // redelivery: the tag is committed, so this no-ops
@@ -716,29 +676,21 @@ object Events {
     ins("o_orderkey % 3 = 1 AND o_orderkey % 1000 <> 7")
     ins("o_orderkey % 3 = 2 AND o_orderkey % 1000 <> 7")
     val ckpt = Files.createTempDirectory("graft_lake_src").toString + "/ckpt"
-    def runOnce(name: String): Long = {
-      val q = spark.readStream.table("graft.lake.orders_feed")
+    def runOnce(): (DataFrame, Long) = {
+      val (out, q) = runToMemory(spark.readStream.table("graft.lake.orders_feed")
         .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.map(_.numInputRows).sum
+        .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total")),
+        "graft_lake_src", "complete", Some(ckpt))
+      (out, q.recentProgress.map(_.numInputRows).sum)
     }
-    val firstRows = runOnce("graft_lake_src_1")
+    val (_, firstRows) = runOnce()
     ins("o_orderkey % 1000 = 7") // the holdout commits as version 4
-    val secondRows = runOnce("graft_lake_src_2")
+    val (out, secondRows) = runOnce()
     val total = spark.sql("SELECT count(*) FROM graft.lake.orders_feed")
       .collect().head.getLong(0)
     val firstOk = if (firstRows == total - secondRows) 1.0 else 0.0
-    spark.sql(
-      s"""SELECT o_orderstatus, n, total FROM graft_lake_src_2
-         |UNION ALL
-         |SELECT 'x_protocol', ${secondRows}L, $firstOk
-         |ORDER BY o_orderstatus""".stripMargin)
+    out.union(spark.range(1).select(lit("x_protocol"), lit(secondRows), lit(firstOk)))
+      .orderBy("o_orderstatus")
   }
 
   /** E42: STREAMING THROUGH A REF — `readStream.table(t)` with
@@ -785,21 +737,16 @@ object Events {
         |SELECT -o_orderkey, 'XX', 0.0 FROM orders_reffeed_src
         |WHERE o_orderkey % 3 = 2 AND o_orderkey % 100 = 7""".stripMargin)
     val ckpt = Files.createTempDirectory("graft_ref_stream").toString + "/ckpt"
-    def runOnce(name: String): Long = {
-      val q = spark.readStream
+    def runOnce(): (DataFrame, Long) = {
+      val (out, q) = runToMemory(spark.readStream
         .option("followRef", "main")
         .table("graft.lake.orders_reffeed")
         .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.map(_.numInputRows).sum
+        .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total")),
+        "graft_ref_stream", "complete", Some(ckpt))
+      (out, q.recentProgress.map(_.numInputRows).sum)
     }
-    val rows1 = runOnce("graft_ref_stream_1")
+    val (_, rows1) = runOnce()
     val publishedCount = spark.sql(
       "SELECT count(*) FROM graft.lake.orders_reffeed VERSION AS OF 'main'")
       .head.getLong(0)
@@ -808,21 +755,16 @@ object Events {
     ins("o_orderkey % 3 = 2") // v5, the correct batch
     spark.sql("CALL graft.system.set_ref('lake.orders_reffeed', 'main', 'branch')")
       .collect()
-    val rows2 = runOnce("graft_ref_stream_2")
+    val (out, rows2) = runOnce()
     val correctCount = spark.sql(
       "SELECT count(*) FROM orders_reffeed_src WHERE o_orderkey % 3 = 2")
       .head.getLong(0)
-    val neverDelivered = spark.sql(
-      "SELECT count(*) FROM graft_ref_stream_2 WHERE o_orderstatus = 'XX'")
-      .head.getLong(0) == 0L
+    val neverDelivered = out.filter(col("o_orderstatus") === "XX").isEmpty
     val ok =
       if (rows1 == publishedCount && rows2 == correctCount && neverDelivered) 1.0
       else 0.0
-    spark.sql(
-      s"""SELECT o_orderstatus, n, total FROM graft_ref_stream_2
-         |UNION ALL
-         |SELECT 'x_protocol', ${rows2}L, $ok
-         |ORDER BY o_orderstatus""".stripMargin)
+    out.union(spark.range(1).select(lit("x_protocol"), lit(rows2), lit(ok)))
+      .orderBy("o_orderstatus")
   }
 
   /** E39: the STREAMING CHANGE DATA FEED
@@ -874,37 +816,30 @@ object Events {
       org.apache.spark.sql.types.StructField("month",
         org.apache.spark.sql.types.StringType)))
     val ckpt = base + "/ckpt"
-    def runOnce(name: String): Long = {
-      val q = spark.readStream.format("graft-cdf")
+    def runOnce(): (DataFrame, Long) = {
+      val (out, q) = runToMemory(spark.readStream.format("graft-cdf")
         .schema(tableSchema)
         .option("manifest", man)
         .option("key", "o_orderkey")
         .load()
         .groupBy(col("_commit_version").as("ver"),
           col("_change_type").as("change_type"))
-        .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.map(_.numInputRows).sum
+        .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total")),
+        "graft_cdf", "complete", Some(ckpt))
+      (out, q.recentProgress.map(_.numInputRows).sum)
     }
-    runOnce("graft_cdf_1") // drains v1 + v2 changes
+    runOnce() // drains v1 + v2 changes
     // v3 commits BETWEEN the runs: the resumed checkpoint must deliver
     // exactly its change rows (the late-months inserts)
     val v3data = v2data.unionByName(orders.filter(col("month") >= c2))
     v3data.repartition(4).write.mode("overwrite").parquet(lake + "/gen3")
     graft.sinks.ManifestStore.publish(spark, man, manifestOf(lake + "/gen3"))
-    val secondRows = runOnce("graft_cdf_2")
+    val (out, secondRows) = runOnce()
     val v3Inserts = orders.filter(col("month") >= c2).count()
     val secondOk = if (secondRows == v3Inserts) 1.0 else 0.0
-    spark.sql(
-      s"""SELECT ver, change_type, n, total FROM graft_cdf_2
-         |UNION ALL
-         |SELECT 99L, 'x_protocol', ${secondRows}L, $secondOk
-         |ORDER BY ver, change_type""".stripMargin)
+    out.union(spark.range(1).select(lit(99L), lit("x_protocol"), lit(secondRows),
+        lit(secondOk)))
+      .orderBy("ver", "change_type")
   }
 
   /** E40: the CHANGE DATA FEED through the CATALOG — E39's stream with
@@ -940,22 +875,15 @@ object Events {
       """UPDATE graft.lake.orders_cdfm SET o_totalprice = o_totalprice + 1000.0
         |WHERE o_orderkey % 5 = 0""".stripMargin)
     val ckpt = Files.createTempDirectory("graft_cdf_cat").toString + "/ckpt"
-    val q = spark.readStream.format("graft-cdf")
+    runToMemory(spark.readStream.format("graft-cdf")
       .option("table", "graft.lake.orders_cdfm")
       .option("key", "o_orderkey")
       .load()
       .groupBy(col("_commit_version").as("ver"),
         col("_change_type").as("change_type"))
-      .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
-      .writeStream.format("memory").queryName("graft_cdf_cat")
-      .outputMode("complete")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.sql(
-      """SELECT ver, change_type, n, total FROM graft_cdf_cat
-        |ORDER BY ver, change_type""".stripMargin)
+      .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total")),
+      "graft_cdf_cat", "complete", Some(ckpt))._1
+      .orderBy("ver", "change_type")
   }
 
   /** E36: streaming heavy hitters — a Misra–Gries frequent-items
@@ -987,13 +915,8 @@ object Events {
       .parquet(input)
       .select(when(expr("event_id % 10 < 6"), expr("user_id % 5"))
         .otherwise(col("event_id") + 1000000L).as("hot_key"))
-    val sketch = stream.groupBy().agg(mg(col("hot_key")).as("summary"))
-    val q = sketch.writeStream
-      .format("memory").queryName("graft_stream_hh")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val sketch = runToMemory(stream.groupBy().agg(mg(col("hot_key")).as("summary")),
+      "graft_stream_hh", "complete")._1
     // emit only keys whose ESTIMATE clears the n/(k+1) guarantee line.
     // Honest stability claim: keys with true count > 2·bound ALWAYS
     // pass (est ≥ true − bound > bound) and keys ≤ bound never do
@@ -1003,7 +926,7 @@ object Events {
     // reuse with different skew must re-check that separation
     val n = ParquetRead(spark, input).count()
     val bound = n / (capacity + 1)
-    spark.table("graft_stream_hh")
+    sketch
       .select(explode(col("summary")).as("e"))
       .select(col("e._1").as("hot_key"), col("e._2").as("est_count"))
       .filter(col("est_count") > bound)
@@ -1085,26 +1008,22 @@ object Events {
       raw.filter(col("ts") >= p95),
       raw.filter(col("ts") < p20)))
     val schema = ParquetRead(spark, inDir).schema
-    val sinkName = s"graft_stream_late_${streamCounter.incrementAndGet()}"
-    val q = spark.readStream.schema(schema)
+    val (out, q) = runToMemory(spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(inDir)
       .withColumn("ts", timestamp_micros(expr("ts div 1000")))
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).as("n"))
-      .writeStream.format("memory").queryName(sinkName)
-      .outputMode("append") // append = only watermark-finalized windows emit
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .agg(count(lit(1)).as("n")),
+      // append = only watermark-finalized windows emit
+      "graft_stream_late", "append")
     // the engine metric counts rows at the STATE operator, i.e. after
     // partial aggregation: dropped window-GROUPS, not raw events
     val droppedGroups = q.recentProgress.toSeq
       .flatMap(_.stateOperators.toSeq).map(_.numRowsDroppedByWatermark).sum
     val inState = q.recentProgress.toSeq.lastOption
       .flatMap(_.stateOperators.headOption).map(_.numRowsTotal).getOrElse(0L)
-    val emitted = spark.table(sinkName).agg(coalesce(sum("n"), lit(0L)))
+    val emitted = out.agg(coalesce(sum("n"), lit(0L)))
       .collect().head.getLong(0)
     val total = raw.count()
     import spark.implicits._
@@ -1150,6 +1069,15 @@ object Events {
       .orderBy("event_type")
 
   private val streamCounter = new AtomicInteger(0)
+
+  /** The setting that selects the RocksDB state store, which
+    * `transformWithState` requires; scope it with
+    * [[graft.GraftSession.withConf]], since every streaming query the
+    * session starts later would otherwise run on RocksDB too.
+    */
+  private[streaming] val RocksDbStateStore: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** E23: streaming CDC apply with deletes — K13's full MERGE driven
     * by Structured Streaming: a change feed lands as files, each
@@ -1298,7 +1226,7 @@ object Events {
     val stream = spark.readStream.schema(schema).parquet(input)
       .withColumn("ts", timestamp_micros(expr("ts div 1000")))
     runToMemory(hourlyAgg(stream.withWatermark("ts", "1 hour")),
-      "graft_stream_parity", "complete")
+      "graft_stream_parity", "complete")._1
       .orderBy("window_start", "event_type")
   }
 
@@ -1318,17 +1246,21 @@ object Events {
         col("n"), col("total_value"))
 
   /** Drive a streaming frame to completion (availableNow) into a
-    * memory sink and return its table.
+    * memory sink named `<prefix>_<n>`, n from a JVM-wide counter, and
+    * return the sink's table with the finished query (its
+    * `recentProgress` holds the run's metrics). A run given a
+    * `checkpoint` resumes where the last run on it stopped.
     */
-  private def runToMemory(df: DataFrame, prefix: String, mode: String): DataFrame = {
+  private def runToMemory(df: DataFrame, prefix: String, mode: String,
+                          checkpoint: Option[String] = None): (DataFrame, StreamingQuery) = {
     val sinkName = s"${prefix}_${streamCounter.incrementAndGet()}"
-    val q = df.writeStream
+    val writer = df.writeStream
       .format("memory").queryName(sinkName)
       .outputMode(mode)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+      .trigger(Trigger.AvailableNow())
+    val q = checkpoint.fold(writer)(writer.option("checkpointLocation", _)).start()
     q.awaitTermination()
-    df.sparkSession.table(sinkName)
+    (df.sparkSession.table(sinkName), q)
   }
 
   /** E33: streaming UNION of two independently-delivered feeds — the
@@ -1392,7 +1324,7 @@ object Events {
         .withColumn("ts", timestamp_micros(expr("ts div 1000")))
         .withWatermark("ts", "1 hour")
     val union = feed(base + "/feedA").union(feed(base + "/feedB"))
-    runToMemory(hourlyAgg(union), "graft_stream_union", "append")
+    runToMemory(hourlyAgg(union), "graft_stream_union", "append")._1
       .orderBy("window_start", "event_type")
   }
 
@@ -1454,14 +1386,7 @@ object Events {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
       .toDF("user_id", "session_start_us", "n_events", "duration_us", "drop")
 
-    val sinkName = s"graft_stream_sess_${streamCounter.incrementAndGet()}"
-    val q = sessions.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+    runToMemory(sessions, "graft_stream_sess", "append")._1
       .filter(!col("drop"))
       .select("user_id", "session_start_us", "n_events", "duration_us")
       .orderBy("user_id", "session_start_us")
@@ -1482,14 +1407,7 @@ object Events {
     val deduped = stream
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
-    val sinkName = s"graft_stream_dedup_${streamCounter.incrementAndGet()}"
-    val q = deduped.writeStream
-      .format("memory").queryName(sinkName)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+    runToMemory(deduped, "graft_stream_dedup", "append")._1
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("total_value"))
       .orderBy("event_type")
@@ -1506,17 +1424,9 @@ object Events {
     */
   def streamTransformWithState(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // transformWithState requires the RocksDB provider, but the session
-    // is shared — scope the conf change to THIS query and restore the
-    // prior provider afterwards, or every later streaming operator in
-    // the run would silently execute under a different state store
     val base = Files.createTempDirectory("graft_tws")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val priorProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val staged = base.toString + "/in"
-    try {
+    try GraftSession.withConf(spark, RocksDbStateStore) {
       Tables.load(spark, dir, "events")
         .filter(col("event_type") === "purchase")
         .select(col("user_id"), col("value"))
@@ -1528,31 +1438,18 @@ object Events {
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Update())
         .toDF("user_id", "n_purchases", "total_value")
-      val sinkName = s"graft_stream_tws_${streamCounter.incrementAndGet()}"
-      val q = updates.writeStream
-        .format("memory").queryName(sinkName)
-        .outputMode("update")
-        .option("checkpointLocation", base.toString + "/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val (out, _) = runToMemory(updates, "graft_stream_tws", "update",
+        Some(base.toString + "/ckpt"))
       val byUser = Window.partitionBy("user_id").orderBy(col("n_purchases").desc)
-      // materialize BEFORE the finally block restores the provider and
-      // deletes the RocksDB checkpoint/state dirs
-      val snapshot = spark.table(sinkName)
+      // materialize before the scope restores the provider and the
+      // finally deletes the RocksDB checkpoint/state dirs
+      out
         .withColumn("rk", row_number().over(byUser)).filter(col("rk") === 1)
         .select(col("user_id"), col("n_purchases"),
           round(col("total_value"), 2).as("total_value"))
         .orderBy("user_id")
         .localCheckpoint()
-      snapshot
-    } finally {
-      priorProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
   }
 
   /** E31: TIMER-driven session finalization via `transformWithState`
@@ -1586,12 +1483,8 @@ object Events {
     import spark.implicits._
     val gapUs = gapMinutes * 60L * 1000000L
     val base = Files.createTempDirectory("graft_timer_sess")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val priorProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val staged = base.toString + "/in"
-    try {
+    try GraftSession.withConf(spark, RocksDbStateStore) {
       val ev = Tables.eventsTsAsNanosLong(spark, dir)
         .select(col("user_id"), expr("ts div 1000").as("ts_us"))
       val Array(medRow) = ev.agg(
@@ -1620,25 +1513,11 @@ object Events {
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
           org.apache.spark.sql.streaming.OutputMode.Append())
         .toDF("user_id", "session_start_us", "n_events", "duration_us")
-      val sinkName = s"graft_timer_sess_${streamCounter.incrementAndGet()}"
-      val q = sessions.writeStream
-        .format("memory").queryName(sinkName)
-        .outputMode("append")
-        .option("checkpointLocation", base.toString + "/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(sinkName)
+      runToMemory(sessions, "graft_timer_sess", "append", Some(base.toString + "/ckpt"))._1
         .filter(col("user_id") >= 0)
         .orderBy("user_id", "session_start_us")
         .localCheckpoint()
-    } finally {
-      priorProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
   }
   /** E32: per-key QUOTA enforcement in-stream — admit each user's
     * first `cap` events in event-time order, reject the rest, and
@@ -1669,13 +1548,7 @@ object Events {
     import spark.implicits._
     val base = Files.createTempDirectory("graft_quota")
     val staged = base.toString + "/in"
-    // conf flips AFTER every fallible setup step: a throw before the
-    // try would leak the provider onto the session (review finding)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val priorProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    try GraftSession.withConf(spark, RocksDbStateStore) {
       val ev = Tables.eventsTsAsNanosLong(spark, dir)
         .select(col("user_id"), col("ts"), col("event_id"))
       val cuts = ev.agg(
@@ -1698,29 +1571,16 @@ object Events {
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Update())
         .toDF("user_id", "n_seen", "n_admitted", "admitted_id_sum")
-      val sinkName = s"graft_stream_quota_${streamCounter.incrementAndGet()}"
-      val q = updates.writeStream
-        .format("memory").queryName(sinkName)
-        .outputMode("update")
-        .option("checkpointLocation", base.toString + "/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val (out, _) = runToMemory(updates, "graft_stream_quota", "update",
+        Some(base.toString + "/ckpt"))
       val byUser = Window.partitionBy("user_id").orderBy(col("n_seen").desc)
-      val snapshot = spark.table(sinkName)
+      out
         .withColumn("rk", row_number().over(byUser)).filter(col("rk") === 1)
         .select(col("user_id"), col("n_seen"), col("n_admitted"),
           col("admitted_id_sum"))
         .orderBy("user_id")
         .localCheckpoint()
-      snapshot
-    } finally {
-      priorProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None    => spark.conf.unset(providerKey)
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
-    }
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{ParquetRead, QueryCost}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -88,10 +88,8 @@ object StreamBench {
           copies: Int = 2, warmRuns: Int = 3): Seq[Entry] = {
     val base = Files.createTempDirectory("graft_streambench")
     val feed = base.toString + "/feed"
-    val spKey = "spark.sql.shuffle.partitions"
-    val priorSp = spark.conf.get(spKey)
-    spark.conf.set(spKey, statePartitions.toString)
-    try {
+    try GraftSession.withConf(spark,
+        "spark.sql.shuffle.partitions" -> statePartitions.toString) {
       val raw = Tables.eventsTsAsNanosLong(spark, dir)
       val maxId = raw.agg(max("event_id")).head.getLong(0) + 1
       val reps = spark.range(copies).select(col("id").as("rep"))
@@ -211,23 +209,8 @@ object StreamBench {
       val plain = Seq("s_window_agg", "s_dedup", "s_sessionize_fmgws",
         "s_join_interval").map(bench)
 
-      // transformWithState requires the RocksDB provider; scope the
-      // conf to this entry and restore (the E18 discipline — leaking
-      // it would silently switch every later streaming query's store)
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prior = spark.conf.getOption(providerKey)
-      spark.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val tws =
-        try bench("s_tws_rocksdb")
-        finally prior match {
-          case Some(v) => spark.conf.set(providerKey, v)
-          case None    => spark.conf.unset(providerKey)
-        }
-      plain :+ tws
-    } finally {
-      spark.conf.set(spKey, priorSp)
-      org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
-    }
+      // transformWithState requires the RocksDB provider
+      plain :+ GraftSession.withConf(spark, Events.RocksDbStateStore)(bench("s_tws_rocksdb"))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
   }
 }

@@ -550,7 +550,8 @@ private[graft] class GraftRemapVector(inner: ColumnVector, mapping: Array[Int])
   *
   * Delete-file placement scales with the statement (round-12 rework of
   * the driver-side ceiling): each task BUFFERS its pairs up to a spill
-  * threshold (`spark.graft.posdelta.spillThreshold`, default 65536).
+  * threshold ([[GraftPosDeltaWriterFactory.SpillThreshold]], 65536
+  * pairs).
   * A task under the threshold ships pairs in its commit MESSAGE and
   * the driver folds every small task into ONE posdel file (targeted
   * DML: one tidy file, zero extra task IO). A task over it SPILLS to
@@ -600,10 +601,6 @@ private[graft] class GraftPosDeltaWrite(
     (f, new org.apache.spark.util.SerializableConfiguration(job.getConfiguration))
   }
 
-  private val spillThreshold: Int =
-    spark.conf.getOption("spark.graft.posdelta.spillThreshold")
-      .map(_.toInt).getOrElse(65536)
-
   override def toBatch: DeltaBatchWrite = new DeltaBatchWrite {
     // a pure DELETE has an EMPTY row schema — the data sink only
     // exists when the statement lands rows (K39's conditional shape)
@@ -623,7 +620,7 @@ private[graft] class GraftPosDeltaWrite(
     override def createBatchWriterFactory(pInfo: PhysicalWriteInfo): DeltaWriterFactory =
       new GraftPosDeltaWriterFactory(
         dataInner.map(_.createBatchWriterFactory(pInfo)).orNull,
-        posFactory, posSerConf, posDelDir, posDelSchema, spillThreshold)
+        posFactory, posSerConf, posDelDir, posDelSchema)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val ms = messages.map(_.asInstanceOf[GraftPosDeltaCommitMessage])
@@ -703,6 +700,11 @@ private[graft] case class GraftPosDeltaCommitMessage(
     posDelFile: Option[String] = None) extends WriterCommitMessage
 
 private[graft] object GraftPosDeltaWriterFactory {
+  /** Deleted `(file, pos)` pairs a task buffers for its commit message
+    * before it spills them to its own posdel file.
+    */
+  val SpillThreshold = 65536
+
   /** A synthetic TaskAttemptContext for committer-less parquet writes
     * (the bucket router's shape) — shared by the executor spill and
     * the driver's small-delta fold.
@@ -724,8 +726,7 @@ private[graft] class GraftPosDeltaWriterFactory(
     posFactory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
     posSerConf: org.apache.spark.util.SerializableConfiguration,
     posDelDir: String,
-    posDelSchema: StructType,
-    spillThreshold: Int)
+    posDelSchema: StructType)
   extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
@@ -754,7 +755,7 @@ private[graft] class GraftPosDeltaWriterFactory(
         else {
           delFiles += file
           delPos += pos
-          if (delFiles.length > spillThreshold) {
+          if (delFiles.length > GraftPosDeltaWriterFactory.SpillThreshold) {
             val ctx = GraftPosDeltaWriterFactory.taskContext(
               posSerConf.value, partitionId)
             spillPath = s"$posDelDir/part-$partitionId-$taskId" +
