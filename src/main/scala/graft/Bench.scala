@@ -42,7 +42,9 @@ import org.apache.spark.sql.graft.ParquetRead
   * (reported in `skipped_blocks`/`truncated_entries`); one stderr
   * heartbeat per entry timestamps where the clock goes; and the
   * [[BenchSentinel.measure]] per-job fixed-cost probe rides in every emission
-  * (`job_cost`) beside [[BenchSentinel]]'s CPU channel.
+  * (`job_cost`: `trivial_ms` is one trivial action (2 jobs under AQE),
+  * `agg32_ms` one 32-partition sum) beside [[BenchSentinel]]'s CPU
+  * channel.
   */
 object Bench {
   val headline: Seq[String] = Seq(
@@ -400,8 +402,10 @@ object Bench {
     // Per-job fixed-cost probe (the second calibration channel — see
     // [[BenchSentinel.measure]]): measured right after the skeleton emission
     // so it rides in every later line; sweep/iterative entry deltas
-    // are then adjudicated against it in-artifact (jobs ×
-    // per-job-cost) instead of via a separate runMain after the fact.
+    // are then adjudicated against it in-artifact (jobs × per-job
+    // cost, where one job costs trivial_ms / 2: trivial_ms times one
+    // trivial action, 2 jobs under AQE) instead of via a separate
+    // runMain after the fact.
     // Until measured, the skeleton carries zeros (contract shape kept).
     var jobCostJson = ""","job_cost":{"trivial_ms":0.00,"agg32_ms":0.00}"""
 
@@ -437,7 +441,7 @@ object Bench {
     val (jobCostMs, aggCostMs) = BenchSentinel.measure(spark, nTrivial = 30, nAgg = 8)
     jobCostJson = f""","job_cost":{"trivial_ms":$jobCostMs%.2f,"agg32_ms":$aggCostMs%.2f}"""
     emit(Seq.empty, "")
-    heartbeat(f"job cost measured (trivial $jobCostMs%.1f ms); headline starts")
+    heartbeat(f"job cost measured (trivial action, 2 jobs under AQE: $jobCostMs%.1f ms); headline starts")
 
     // names that have drifted out of the registry are REPORTED, not
     // silently absent — otherwise a rename would keep a complete block
@@ -542,8 +546,9 @@ object Bench {
       if (streamEntries.isEmpty) ""
       else {
         val evps = streamEntries.map(e => e.name -> e.eventsPerSec)
-        // per-entry JOB COUNTS (r14 #2): jobs × job_cost.trivial_ms is
-        // the in-artifact arithmetic that separates dispatch cost from
+        // per-entry JOB COUNTS (r14 #2): jobs × job_cost.trivial_ms / 2
+        // (trivial_ms is one trivial action, 2 jobs under AQE) is the
+        // in-artifact arithmetic that separates dispatch cost from
         // state-store work on a slow box — readable beside the sentinel
         val jobsJson = streamEntries
           .map(e => "\"" + e.name + "\":" + e.jobs).mkString("{", ",", "}")

@@ -57,14 +57,16 @@ object BenchSentinel {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** The per-JOB fixed-cost probe, the second calibration channel:
-    * (ms per trivial `range(1).count()`, ms per 32-partition sum). With
-    * AQE on, each of these actions runs two jobs: the partial
-    * aggregate's map stage, then the final one. Entries built from many
-    * small jobs (parameter sweeps, iterative re-rank loops, planner
-    * entries with driver collects) pay `jobs × per-job cost`, so a box
-    * whose Spark job dispatch is slow inflates exactly those entries
-    * while single-scan entries barely move.
+  /** The per-job fixed-cost probe, the second calibration channel:
+    * (ms per one trivial action (2 jobs under AQE), ms per 32-partition
+    * sum). The trivial action is `range(1).count()`; with AQE on, it
+    * and the sum each run two jobs: the partial aggregate's map stage,
+    * then the final one. So the cost of one job is half the first
+    * number. Entries built from many small jobs (parameter sweeps,
+    * iterative re-rank loops, planner entries with driver collects)
+    * pay `jobs × per-job cost`, so a box whose Spark job dispatch is
+    * slow inflates exactly those entries while single-scan entries
+    * barely move.
     *
     * Round-12 measurements: ~50–90 ms per trivial action, the same on a
     * vanilla SparkSession (no graft extensions, default confs) and at
@@ -82,11 +84,11 @@ object BenchSentinel {
     (1 to 10).foreach(_ => spark.range(1).count())
     val t0 = System.nanoTime()
     (1 to nTrivial).foreach(_ => spark.range(1).count())
-    val perJob = (System.nanoTime() - t0) / 1e6 / nTrivial
+    val perAction = (System.nanoTime() - t0) / 1e6 / nTrivial
     val t1 = System.nanoTime()
     (1 to nAgg).foreach(_ => spark.range(0L, 1L << 20, 1L, 32).selectExpr("sum(id)").head())
     val perShuffle = (System.nanoTime() - t1) / 1e6 / nAgg
-    (perJob, perShuffle)
+    (perAction, perShuffle)
   }
 
   /** Probe + loadavg, recorded against the entry that just finished. */

@@ -45,13 +45,39 @@ import scala.util.Try
   *     listener threads' CPU was the same for all three (+0.02 s a pass
   *     for the trimming).
   *     A session that turns the UI on can raise them with `.config`.
+  *   - query-stage threads are reused: AQE hands each shuffle stage,
+  *     each query's final stage and each broadcast to one of three
+  *     JVM-wide pools (`shuffle-exchange`, `ResultQueryStageExecution`,
+  *     `broadcast-exchange`), whose core size equals their cap of 1024,
+  *     1024 and 128 threads. Below the cap every task starts a new
+  *     thread even when idle ones wait, and a thread lives 60 s after
+  *     its last task with ~22 KB of thread-local heap. A warm pass of
+  *     the corpus flow, the LSH kNN join and PageRank started 28
+  *     shuffle and 15 result-stage threads, so a driver that ran the
+  *     pass again and again held 43 more threads and ~0.9 MB more heap
+  *     after each pass. Here each pool holds 16, as Spark's subquery
+  *     pool and AQE's stage-creator pool do, and a pass starts none
+  *     once they are full. A pool thread computes a stage's partitions
+  *     and submits its job, runs a query's final job, or collects one
+  *     broadcast, whose build side under AQE is a stage already done.
+  *     Spark 4.1 also has it wait for the scalar subqueries in its
+  *     stage, whose own stages need the same pools: 16 such waits
+  *     would hold a pool while the subqueries queue behind them. So
+  *     the session's [[org.apache.spark.sql.graft.ResolveStageSubqueries]]
+  *     rule resolves them on the thread that plans the stage, and no
+  *     pool thread waits on a task of its own pool. Outside AQE
+  *     (streaming micro-batches) a broadcast whose build side holds
+  *     another broadcast or a subquery still waits on a pool thread,
+  *     so more than 16 such broadcasts at once can stall: the same
+  *     trade Spark makes with its 16-thread subquery pool.
   *
-  * Precondition for the codegen cache: Spark reads
-  * `spark.sql.codegen.cache.maxEntries` once per JVM, when the JVM
-  * first generates code. The 1000-entry cap takes effect only if a
-  * session built here is active at that moment; if any code was
-  * generated before, the cache stays at Spark's 100 for the life of the
-  * JVM. Build the session before any other Spark call.
+  * Precondition for the static settings (the codegen cache and the
+  * pool caps): Spark reads each of them once per JVM, the cache size
+  * when the JVM first generates code and each cap when its pool is
+  * first used. They take effect only if a session built here is active
+  * at that moment; otherwise the JVM keeps Spark's defaults (a cache of
+  * 100, pools of 1024, 1024 and 128) for its life. Build the session
+  * before any other Spark call.
   */
 object GraftSession {
   def builder(
@@ -95,6 +121,10 @@ object GraftSession {
       // class retains ~23 KB of heap, so a full cache is ~23 MB.
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       .config("spark.sql.codegen.useIdInClassName", "false")
+      // static: each pool is sized when first used (see the scaladoc)
+      .config("spark.sql.shuffleExchange.maxThreadThreshold", "16")
+      .config("spark.sql.resultQueryStage.maxThreadThreshold", "16")
+      .config("spark.sql.broadcastExchange.maxThreadThreshold", "16")
 
   /** Run `body` with `settings` on the session's conf, then hand the
     * conf back as it was. The keys are set inside the scope, so a

@@ -132,7 +132,17 @@ object Dedup {
     * exact Jaccard is verified per candidate from the full sets.
     */
   def ngramJaccard(spark: SparkSession, dir: String,
-                   threshold: Double = 0.5, n: Int = 3): DataFrame = {
+                   threshold: Double = 0.5, n: Int = 3): DataFrame =
+    ngramPairs(spark, dir, threshold, n).orderBy("doc_a", "doc_b")
+
+  /** [[ngramJaccard]]'s pairs in no order, for consumers that impose
+    * none of their own: [[clusterLabels]] checkpoints a union of both
+    * edge directions, and Catalyst keeps a sort under a union, so a
+    * sorted input cost a range-partition sample job and a range
+    * shuffle that nothing read.
+    */
+  private[graft] def ngramPairs(spark: SparkSession, dir: String,
+                                threshold: Double = 0.5, n: Int = 3): DataFrame = {
     val (sets, cand) = ngramJaccardCandidates(spark, dir, threshold, n)
     // exact verify on candidates only, from the full hashed sets
     cand
@@ -144,7 +154,6 @@ object Dedup {
           (size(col("sha")) + size(col("shb")) - col("inter")), 4))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
-      .orderBy("doc_a", "doc_b")
   }
 
   /** D2's prefix-filtered candidate stage, exposed so the scale spec
@@ -927,7 +936,7 @@ object Dedup {
     */
   def dedupClusters(spark: SparkSession, dir: String,
                     threshold: Double = 0.5): DataFrame =
-    clusterLabels(ngramJaccard(spark, dir, threshold).select("doc_a", "doc_b"))
+    clusterLabels(ngramPairs(spark, dir, threshold).select("doc_a", "doc_b"))
       .groupBy(col("lbl").as("cluster_id"))
       .agg(count(lit(1)).as("n_members"))
       .orderBy("cluster_id")
@@ -953,7 +962,7 @@ object Dedup {
   def clusterQuarantine(spark: SparkSession, dir: String,
                         threshold: Double = 0.5, maxCluster: Int = 4): DataFrame = {
     val labels = clusterLabels(
-      ngramJaccard(spark, dir, threshold).select("doc_a", "doc_b"))
+      ngramPairs(spark, dir, threshold).select("doc_a", "doc_b"))
     val sized = labels.groupBy("lbl").agg(count(lit(1)).as("sz"))
     Tables.load(spark, dir, "documents").select("doc_id")
       .join(labels.select(col("id").as("doc_id"), col("lbl")), Seq("doc_id"), "left")

@@ -46,7 +46,7 @@ object CorpusPipeline {
       }
       val nearDupSurvivors = task("near_dup_resolve") {
         val ids = exactDeduped.select("doc_id")
-        val pairs = Dedup.ngramJaccard(spark, dir, threshold)
+        val pairs = Dedup.ngramPairs(spark, dir, threshold)
           .select("doc_a", "doc_b")
           .join(ids.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
           .join(ids.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")

@@ -155,5 +155,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer extension: automatic bloom-filter join pushdown
     // (conf-gated by spark.graft.bloomJoinPushdown, default off)
     ext.injectOptimizerRule(_ => BloomJoinRewrite)
+    // AQE stage rule: no query-stage thread waits on a subquery
+    ext.injectQueryStageOptimizerRule(_ => ResolveStageSubqueries)
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.metrics.source.CodegenMetrics
 
 import graft.operators.{Graph, Similarity}
@@ -20,12 +18,6 @@ import graft.pipeline.CorpusPipeline
   */
 class CodegenReuseSpec extends SparkSpec {
 
-  private def freshCopy(): String = {
-    val dst = Files.createTempDirectory("graft_codegen_reuse")
-    Files.list(Paths.get(sfDir)).forEach(f => Files.copy(f, dst.resolve(f.getFileName)))
-    dst.toString
-  }
-
   private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Classes compiled while the three calls run and materialize. */
@@ -42,8 +34,8 @@ class CodegenReuseSpec extends SparkSpec {
     // first touched; the first run then starts cold whatever ran before
     spark.sparkContext
     org.apache.spark.graft.TestCodegenCache.clear()
-    val first = run(freshCopy())
-    val second = run(freshCopy())
+    val first = run(SparkSpec.freshCopy(sfDir))
+    val second = run(SparkSpec.freshCopy(sfDir))
     assert(second <= first / 10,
       s"the second run compiled $second classes, the first $first")
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.graft.QueryCost
 
+import scala.jdk.CollectionConverters._
+
 /** The profiler: one query at a time, timed by the bench's own loop
   * ([[Bench.timeQuery]]) and measured by the one cost listener
   * ([[QueryCost]]). It is test code, so it does not ship in the
@@ -19,7 +21,11 @@ import org.apache.spark.sql.graft.QueryCost
   *   - `plans <sfDir> <query>…`: formatted physical plans;
   *   - `jobcost`: the per-job fixed cost ([[BenchSentinel.measure]]);
   *   - `stream <sfDir>`: the streaming throughput block
-  *     ([[graft.streaming.StreamBench]]), one entry a line.
+  *     ([[graft.streaming.StreamBench]]), one entry a line;
+  *   - `threads <sfDir> <runs> <query>…`: `runs` runs of the queries,
+  *     each over a fresh copy of `sfDir`; after each run, the heap
+  *     after GC and the live threads, in all and per driver pool
+  *     ([[threadPools]]).
   *
   * A mode is a function of a session and its arguments; only `main`
   * builds and stops a session.
@@ -27,7 +33,22 @@ import org.apache.spark.sql.graft.QueryCost
 object Prof {
   val modes: Map[String, (SparkSession, Seq[String]) => Unit] = Map(
     "time" -> time, "stages" -> stages, "scale" -> scale, "plans" -> plans,
-    "jobcost" -> jobCost, "stream" -> stream)
+    "jobcost" -> jobCost, "stream" -> stream, "threads" -> threads)
+
+  /** Thread-name prefixes of AQE's three query-stage pools, which
+    * [[GraftSession]] caps at 16.
+    */
+  val stagePools: Seq[String] = Seq("shuffle-exchange-", "ResultQueryStageExecution-", "broadcast-exchange-")
+
+  /** The driver pools that `threads` counts: [[stagePools]] and the
+    * block manager's two, which Spark fixes at 100 each.
+    */
+  val threadPools: Seq[String] =
+    stagePools ++ Seq("block-manager-ask-thread-pool-", "block-manager-storage-async-thread-pool-")
+
+  /** The names of the JVM's live threads. */
+  def liveThreadNames(): Seq[String] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq.filter(_.isAlive).map(_.getName)
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.flatMap(modes.get).getOrElse {
@@ -98,8 +119,8 @@ object Prof {
   }
 
   def jobCost(spark: SparkSession, args: Seq[String]): Unit = {
-    val (perJob, perShuffle) = BenchSentinel.measure(spark)
-    println(f"JOBCOST per-trivial-job ms=$perJob%.2f")
+    val (perAction, perShuffle) = BenchSentinel.measure(spark)
+    println(f"JOBCOST per-trivial-action ms=$perAction%.2f (2 jobs under AQE)")
     println(f"JOBCOST per-32task-agg ms=$perShuffle%.2f")
   }
 
@@ -108,4 +129,33 @@ object Prof {
       println(f"STREAM ${e.name}%-22s med=${e.sec}%6.2fs min=${e.minSec}%6.2fs " +
         f"events=${e.events} evps=${e.eventsPerSec}%,.0f jobs=${e.jobs}")
     }
+
+  def threads(spark: SparkSession, args: Seq[String]): Unit = {
+    val Seq(dir, runs, queries @ _*) = args
+    val rt = Runtime.getRuntime
+    def used: Long = rt.totalMemory - rt.freeMemory
+    (1 to runs.toInt).foreach { run =>
+      val copy = SparkSpec.freshCopy(dir)
+      queries.foreach(q => Bench.runOnce(spark, q, copy))
+      // the listeners see the whole run; then collect until the heap
+      // stops falling. A collection queues Spark's ContextCleaner, which
+      // frees unreachable blocks on its own thread, so wait between
+      // collections (as the benchmark's retained-heap probe does)
+      QueryCost.drain(spark.sparkContext)
+      def collect(): Long = { System.gc(); used }
+      var heap = collect()
+      var rounds = 0
+      var fell = true
+      while (fell && rounds < 5) {
+        Thread.sleep(100)
+        val next = collect()
+        rounds += 1
+        fell = next < heap * 0.99
+        heap = math.min(heap, next)
+      }
+      val names = liveThreadNames()
+      val pools = threadPools.map(p => s"${p.stripSuffix("-")}=${names.count(_.startsWith(p))}")
+      println(f"THREADS run=$run heapMB=${heap / 1048576.0}%.1f live=${names.size} ${pools.mkString(" ")}")
+    }
+  }
 }

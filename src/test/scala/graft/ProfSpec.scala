@@ -16,8 +16,9 @@ class ProfSpec extends SparkSpec {
     ("stages", Seq(sfDir, "q1_agg"), "TOTAL q1_agg"),
     ("scale", Seq(sfDir, "q1_agg"), "SCALE q1_agg base="),
     ("plans", Seq(sfDir, "q1_agg"), "== Physical Plan =="),
-    ("jobcost", Seq.empty, "JOBCOST per-trivial-job ms="),
-    ("stream", Seq(sfDir), "STREAM s_window_agg"))
+    ("jobcost", Seq.empty, "JOBCOST per-trivial-action ms="),
+    ("stream", Seq(sfDir), "STREAM s_window_agg"),
+    ("threads", Seq(sfDir, "1", "q1_agg"), "THREADS run=1 heapMB="))
 
   test("the specs cover every mode") {
     assert(lines.map(_._1).toSet == Prof.modes.keySet)
@@ -35,5 +36,11 @@ class ProfSpec extends SparkSpec {
     val runs = printed("time", sfDir, "q1_agg").linesIterator.filter(_.startsWith("RUN q1_agg")).toList
     assert(runs.size == 4, runs)
     assert(runs.forall(_.contains("persistedRDDs=")), runs)
+  }
+
+  test("Prof threads prints one line a run with every pool's count") {
+    val runs = printed("threads", sfDir, "2", "q1_agg").linesIterator.filter(_.startsWith("THREADS")).toList
+    assert(runs.size == 2, runs)
+    runs.foreach(r => Prof.threadPools.foreach(p => assert(r.contains(s" ${p.stripSuffix("-")}="), r)))
   }
 }

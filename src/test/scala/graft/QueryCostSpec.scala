@@ -32,6 +32,18 @@ class QueryCostSpec extends SparkSpec {
     assert((cost.jobs.size, cost.stages.size) == (24, 24), cost)
   }
 
+  // BenchSentinel.measure's units: job_cost.trivial_ms times one
+  // `range(1).count()` and agg32_ms one 32-partition sum, each two jobs
+  // with AQE on (the partial aggregate's map stage, then the final
+  // one). A Spark that plans them otherwise changes what both mean.
+  test("BenchSentinel's trivial action and 32-partition sum each run exactly 2 jobs") {
+    spark.range(1).count()
+    val (_, trivial) = QueryCost.of(spark)(spark.range(1).count())
+    val (_, agg32) = QueryCost.of(spark)(spark.range(0L, 1L << 20, 1L, 32).selectExpr("sum(id)").head())
+    assert(trivial.jobs.size == 2, trivial)
+    assert(agg32.jobs.size == 2, agg32)
+  }
+
   test("every job recorded has ended, after it started; stages carry their tasks") {
     val cost = warmCost("q1_agg")
     assert(cost.jobs.map(_.id).distinct.size == cost.jobs.size)

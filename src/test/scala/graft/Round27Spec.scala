@@ -357,14 +357,8 @@ class Round27Spec extends SparkSpec {
          |JOIN $cat.lake.cbo_dim_a da ON f.k1 = da.k
          |JOIN $cat.lake.cbo_dim_b db ON f.k2 = db.k""".stripMargin
     val defaultOrder = leafOrder(q)
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    val cboOrder =
-      try leafOrder(q)
-      finally {
-        spark.conf.set("spark.sql.cbo.enabled", "false")
-        spark.conf.set("spark.sql.cbo.joinReorder.enabled", "false")
-      }
+    val cboOrder = GraftSession.withConf(spark,
+      "spark.sql.cbo.enabled" -> "true", "spark.sql.cbo.joinReorder.enabled" -> "true")(leafOrder(q))
     // with NDV stats, joining the 10-row/10-NDV dim first costs
     // 20000·10/500 = 400 intermediate rows vs 20000 the other way —
     // the reorder must pull dim_b ahead of dim_a

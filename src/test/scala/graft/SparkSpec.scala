@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,5 +19,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+}
+
+object SparkSpec {
+  /** A copy of `dir`'s files in a new temporary directory, as a
+    * scheduled flow sees its input: nothing a path-keyed memo holds
+    * for `dir` is reused.
+    */
+  def freshCopy(dir: String): String = {
+    val dst = Files.createTempDirectory("graft_fresh_copy")
+    Files.list(Paths.get(dir)).forEach(f => Files.copy(f, dst.resolve(f.getFileName)))
+    dst.toString
   }
 }
