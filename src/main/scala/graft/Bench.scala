@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ParquetRead
+import org.apache.spark.sql.graft.{CheckpointIds, ParquetRead}
 
 /** Benchmark main — one JSON line on stdout, per the driver contract.
   *
@@ -243,12 +243,12 @@ object Bench {
 
   /** One timed run of query `name` over `dir`, in seconds. */
   private[graft] def runOnce(spark: SparkSession, name: String, dir: String): Double = {
-    // drop cross-entry shared artifacts (the G2/G8 memoized triangle
-    // stream) before EVERY timed run: the bench grades the full
-    // pipeline at each scale, not memo reuse — otherwise the
+    // free every checkpoint held across calls (the G2/G8 triangle
+    // stream, D3's candidates) before EVERY timed run: the bench grades
+    // the full pipeline at each scale, not memo reuse — otherwise the
     // scale-step ratio of a shared-pass operator would measure
     // cache-hit arithmetic and read as fake sub-linearity
-    graft.operators.Graph.dropSharedCache(spark)
+    CheckpointIds.release(spark)
     val t0 = System.nanoTime()
     // full materialization: a bare .count() lets Catalyst prune the
     // projected expressions (and drop final sorts) under

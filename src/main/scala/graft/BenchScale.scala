@@ -89,9 +89,9 @@ object BenchScale {
     // the preliminary line above stays as the artifact) when the
     // parent's budget is already exceeded.
     if (overBudget) { spark.stop(); return }
-    graft.operators.Graph.dropSharedCache(spark)
+    org.apache.spark.sql.graft.CheckpointIds.release(spark)
     val workBase = graft.operators.Graph.workMass(spark, sfDir)
-    graft.operators.Graph.dropSharedCache(spark)
+    org.apache.spark.sql.graft.CheckpointIds.release(spark)
     val workScaled = graft.operators.Graph.workMass(spark, scaledDir)
     val workJson = workBase.keys.toSeq.sorted.map { k =>
       val (b, s) = (workBase(k), workScaled(k))

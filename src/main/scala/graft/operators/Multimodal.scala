@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.Tables
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointIds
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -407,7 +408,7 @@ object Multimodal {
     // one-task wall at sf0.1 otherwise
     val spread = media.repartition(
       media.sparkSession.sparkContext.defaultParallelism)
-    val sigs = blockhashSig(spread).localCheckpoint()
+    val sigs = CheckpointIds.scoped(media.sparkSession)(cp => cp(blockhashSig(spread)))
     val mask = (1L << bitsPerBand) - 1
     val banded = sigs.select(col("doc_id"), col("sig"),
       explode(array((0 until nBands).map(j => struct(

@@ -1135,8 +1135,8 @@ object Similarity {
     def enc(c: Column): Column = transform(sequence(lit(0), lit(words - 1)),
       w => aggregate(slice(c, w * lit(32) + 1, lit(32)), lit(0L),
         (acc, x) => acc * 2 + when(x > lit(0.0f), 1L).otherwise(0L)))
-    val coded = e.select(col("vec_id"), enc(col("embedding")).as("code"))
-      .localCheckpoint()
+    val coded = CheckpointIds.scoped(spark)(cp =>
+      cp(e.select(col("vec_id"), enc(col("embedding")).as("code"))))
     val q = broadcast(e.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         enc(col("embedding")).as("qcode")))
@@ -1541,7 +1541,8 @@ object Similarity {
     // materialize once: every Lloyd round + the final assignment re-read
     // this set (iters+2 passes), so truncating at the scan is the same
     // localCheckpoint pattern as the BPE/GD/coreset loops
-    val e = repartitionTo.map(base.repartition(_)).getOrElse(base).localCheckpoint()
+    val e = CheckpointIds.scoped(spark)(cp =>
+      cp(repartitionTo.map(base.repartition(_)).getOrElse(base)))
     var cent: Seq[Seq[Double]] = kmeansPlusPlusSeeds(e, k)
     def assign(c: Seq[Seq[Double]]): Column =
       element_at(VectorFunctions.nearestCentroids(col("embedding"), c, 1), 1)

@@ -4,7 +4,7 @@ import graft.{GraftSession, Tables}
 import graft.functions.Aggregators
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{GraftFunctions, ParquetRead}
+import org.apache.spark.sql.graft.{CheckpointIds, GraftFunctions, ParquetRead}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import java.nio.file.Files
@@ -84,12 +84,11 @@ object Analytics {
         // loud-or-silent depending on spark.sql.ansi.enabled)
         coalesce(sum(round(col("o_totalprice") * 1e6).cast("decimal(38,0)")),
           lit(0).cast("decimal(38,0)")).as("sum_price_micro"))
-    // eager checkpoint = the action that flushes the observation;
+    // the checkpoint's job is the action that flushes the observation;
     // the rollup and the counters come from ONE pass over orders
-    val out = base
+    val out = CheckpointIds.scoped(spark)(cp => cp(base
       .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
-      .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))))
     val m = obs.get
     out
       .withColumn("observed_rows", lit(m("n_rows").asInstanceOf[Long]))
@@ -808,14 +807,14 @@ object Analytics {
         .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 2).as("qty"),
           max("k_total").as("k_total"))
         .orderBy("k")
-      // Eager localCheckpoint materializes the join under the tuned
+      // The checkpoint materializes the join under the tuned
       // conf (AQE reads conf at execution time) and truncates the
       // returned plan to the materialized blocks — no driver
       // round-trip, no persistent cache entry to leak, and no way for
       // a later consumer to silently re-run the join under the
       // restored (un-tuned) conf. The skew=true marker is read from
       // the executed AdaptiveSparkPlan the checkpoint just ran.
-      val snapped = joined.localCheckpoint()
+      val snapped = CheckpointIds.scoped(spark)(cp => cp(joined))
       val skewHandled = joined.queryExecution.executedPlan.toString
         .contains("skew=true")
       snapped.withColumn("skew_handled", lit(skewHandled)).orderBy("k")
@@ -1468,12 +1467,12 @@ object Analytics {
     GraftSession.withConf(spark, "spark.graft.bloomJoinPushdown" -> "true") {
       val dim = Tables.load(spark, dir, "customer")
         .filter(col("c_acctbal") > 9000).select("c_custkey")
-      Tables.load(spark, dir, "orders")
+      // materialized here: the plan optimizes while the flag is on
+      CheckpointIds.scoped(spark)(cp => cp(Tables.load(spark, dir, "orders")
         .join(dim, col("o_custkey") === col("c_custkey"))
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
-        .orderBy("o_orderstatus")
-        .localCheckpoint() // eager: the plan optimizes while the flag is on
+        .orderBy("o_orderstatus")))
     }
   }
 
@@ -1507,10 +1506,9 @@ object Analytics {
       base.toString + "/orders_monthly")
     try GraftSession.withConf(spark, "spark.graft.mvRewrite" -> "true") {
       // the consumer writes the plain fact-table aggregate — the MV
-      // substitution is the optimizer's business, not the author's
-      monthly
-        .orderBy("month")
-        .localCheckpoint() // eager: the plan optimizes while the flag is on
+      // substitution is the optimizer's business, not the author's;
+      // materialized here: the plan optimizes while the flag is on
+      CheckpointIds.scoped(spark)(cp => cp(monthly.orderBy("month")))
     } finally {
       // the result is checkpointed — the MV copy and its registration
       // are scoped to this call (repeat bench runs must not pile up
@@ -1549,13 +1547,13 @@ object Analytics {
       base.toString + "/orders_daily")
     try GraftSession.withConf(spark, "spark.graft.mvRewrite" -> "true") {
       // the consumer writes the plain MONTHLY fact-table aggregate —
-      // the rollup substitution is the optimizer's business
-      orders
+      // the rollup substitution is the optimizer's business;
+      // materialized here: the plan optimizes while the flag is on
+      CheckpointIds.scoped(spark)(cp => cp(orders
         .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
         .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"),
           max("o_totalprice").as("mx"))
-        .orderBy("month")
-        .localCheckpoint() // eager: the plan optimizes while the flag is on
+        .orderBy("month")))
     } finally {
       MvRewrite.clear(spark)
       org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)

@@ -5,7 +5,7 @@ import graft.sinks.TableStore
 import graft.sources.{FvecsIO, Ingest}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ParquetRead
+import org.apache.spark.sql.graft.{CheckpointIds, ParquetRead}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.nio.file.Files
@@ -2055,13 +2055,13 @@ object IOQueries {
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // materialize under the no-broadcast conf so the executed join
       // is the storage-partitioned one the operator exists to prove
-      spark.sql(
+      CheckpointIds.scoped(spark)(cp => cp(spark.sql(
         """SELECT c_mktsegment, count(*) AS n_orders,
           |  round(sum(o_totalprice), 2) AS total
           |FROM graft.lake.orders_bkt o
           |JOIN graft.lake.customer_bkt c ON o.o_custkey = c.c_custkey
           |GROUP BY c_mktsegment
-          |ORDER BY c_mktsegment""".stripMargin).localCheckpoint()
+          |ORDER BY c_mktsegment""".stripMargin)))
     }
   }
 

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointIds
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The relational query layer (SURVEY.md §2 Q1–Q15, T1–T4).
@@ -654,11 +655,10 @@ object Relational {
     // checkpoint pins the range boundaries: the counts action and the
     // final plan must see the SAME row→partition assignment (the range
     // partitioner samples per execution)
-    val ranged = spend
+    val ranged = CheckpointIds.scoped(spark)(cp => cp(spend
       .repartitionByRange(p, col("spend"), col("o_custkey"))
       .sortWithinPartitions("spend", "o_custkey")
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint()
+      .withColumn("pid", spark_partition_id())))
     val counts = ranged.groupBy("pid").agg(count(lit(1)).as("c"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val n = counts.values.sum

@@ -4,7 +4,7 @@ import graft.Tables
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{ColumnShim, LangIdExpr, MinGramMd5, TextStatsExpr}
+import org.apache.spark.sql.graft.{CheckpointIds, ColumnShim, LangIdExpr, MinGramMd5, TextStatsExpr}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Text-analysis operators over the `documents` table (SURVEY.md §2
@@ -897,43 +897,46 @@ object TextQueries {
           .select(col("doc_id"), feats.as("x")),
         Seq("doc_id"))
       .select(col("doc_id"), col("x"), col("keep").cast("double").as("y"))
-    val raw = repartitionTo.fold(base)(p => base.repartition(p)).localCheckpoint()
-    val n = raw.count()
-    // Standardize every non-bias feature to zero-mean/unit-variance
-    // micro-ints — raw features are all non-negative, and un-centered
-    // GD spends its budget fitting the bias instead of separating.
-    // μ and σ derive from EXACT long sums (Σx, Σx² via one mergeable
-    // aggregate), so the standardized ints — like the gradients — are
-    // identical under any partitioning.
-    // Σv fits a long up to ~9e12 docs, but Σv² (v ≤ 1e6 → v² ≤ 1e12)
-    // would overflow past ~9.2e6 docs — sum it as decimal(38,0), which
-    // is still EXACT integer arithmetic (order-independent), just wider
-    val stats = raw
-      .select(posexplode(col("x")).as(Seq("b", "v")))
-      .groupBy("b").agg(sum("v").as("s"),
-        sum((col("v") * col("v")).cast("decimal(38,0)")).as("s2"))
-      .collect().map(r =>
-        r.getInt(0) -> (r.getLong(1), r.getDecimal(2).toBigInteger)).toMap
-    val mu = (0 until d).map(b => stats(b)._1.toDouble / n).toArray
-    val sd = (0 until d).map { b =>
-      math.sqrt(math.max(0.0, new java.math.BigDecimal(stats(b)._2).doubleValue() / n -
-        mu(b) * mu(b)))
-    }.toArray
-    val muLit = typedlit(mu.toSeq)
-    val sdLit = typedlit(sd.map(s => if (s < 1e-9) 1.0 else s).toSeq)
-    val keepBias = typedlit((0 until d).map(b => if (sd(b) < 1e-9) 1 else 0))
-    val labeled = raw
-      .select(col("doc_id"),
-        zip_with(col("x"), sequence(lit(0), lit(d - 1)), (xi, b) =>
-          when(element_at(keepBias, b + 1) === 1, xi) // constant cols (bias) pass through
-            // clip at ±10σ (1e7 micro): a near-constant feature's σ
-            // shrinks like Δ/√n, so an unclipped outlier z-score grows
-            // with corpus size and could overflow the long dot product
-            .otherwise(greatest(lit(-10000000L), least(lit(10000000L),
-              round((xi.cast("double") - element_at(muLit, b + 1)) /
-                element_at(sdLit, b + 1) * 1e6).cast("long"))))).as("x"),
-        col("y"))
-      .localCheckpoint()
+    // the raw features are read only until the standardized ones are
+    // materialized: the scope frees them then
+    val (labeled, n) = CheckpointIds.scoped(spark) { cp =>
+      val (raw, n) = cp.counting(repartitionTo.fold(base)(p => base.repartition(p)))
+      // Standardize every non-bias feature to zero-mean/unit-variance
+      // micro-ints — raw features are all non-negative, and un-centered
+      // GD spends its budget fitting the bias instead of separating.
+      // μ and σ derive from EXACT long sums (Σx, Σx² via one mergeable
+      // aggregate), so the standardized ints — like the gradients — are
+      // identical under any partitioning.
+      // Σv fits a long up to ~9e12 docs, but Σv² (v ≤ 1e6 → v² ≤ 1e12)
+      // would overflow past ~9.2e6 docs — sum it as decimal(38,0), which
+      // is still EXACT integer arithmetic (order-independent), just wider
+      val stats = raw
+        .select(posexplode(col("x")).as(Seq("b", "v")))
+        .groupBy("b").agg(sum("v").as("s"),
+          sum((col("v") * col("v")).cast("decimal(38,0)")).as("s2"))
+        .collect().map(r =>
+          r.getInt(0) -> (r.getLong(1), r.getDecimal(2).toBigInteger)).toMap
+      val mu = (0 until d).map(b => stats(b)._1.toDouble / n).toArray
+      val sd = (0 until d).map { b =>
+        math.sqrt(math.max(0.0, new java.math.BigDecimal(stats(b)._2).doubleValue() / n -
+          mu(b) * mu(b)))
+      }.toArray
+      val muLit = typedlit(mu.toSeq)
+      val sdLit = typedlit(sd.map(s => if (s < 1e-9) 1.0 else s).toSeq)
+      val keepBias = typedlit((0 until d).map(b => if (sd(b) < 1e-9) 1 else 0))
+      val labeled = cp(raw
+        .select(col("doc_id"),
+          zip_with(col("x"), sequence(lit(0), lit(d - 1)), (xi, b) =>
+            when(element_at(keepBias, b + 1) === 1, xi) // constant cols (bias) pass through
+              // clip at ±10σ (1e7 micro): a near-constant feature's σ
+              // shrinks like Δ/√n, so an unclipped outlier z-score grows
+              // with corpus size and could overflow the long dot product
+              .otherwise(greatest(lit(-10000000L), least(lit(10000000L),
+                round((xi.cast("double") - element_at(muLit, b + 1)) /
+                  element_at(sdLit, b + 1) * 1e6).cast("long"))))).as("x"),
+          col("y")))
+      (labeled, n)
+    }
     var w = Array.fill(d)(0L) // micro-weights
     def zCol(weights: Array[Long]): Column =
       aggregate(zip_with(col("x"), typedlit(weights.toSeq), (xi, wi) => xi * wi),

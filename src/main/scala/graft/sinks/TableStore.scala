@@ -3,7 +3,7 @@ package graft.sinks
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ParquetRead
+import org.apache.spark.sql.graft.{CheckpointIds, ParquetRead}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Managed-table storage — the reference's `store_table_in_db`
@@ -157,40 +157,44 @@ object TableStore {
     // deterministically; a real feed has unique positions)
     val wBatch = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(seqCol).desc, col(opCol))
-    val resolved = cdc
-      .withColumn("__rn", row_number().over(wBatch))
-      .filter(col("__rn") === 1).drop("__rn", seqCol)
-      .localCheckpoint() // the retry loop must not recompute the feed
-    var attempt = 0
-    while (attempt <= maxRetries) {
-      attempt += 1
-      val basedOn = ManifestStore.versions(spark, s"$base/manifest").lastOption.getOrElse(0L)
-      val merged =
-        if (basedOn == 0L) resolved.filter(col(opCol) =!= "delete").drop(opCol)
-        else {
-          val current = readCdcVersion(spark, base, basedOn)
-            .withColumn(opCol, lit("update")).withColumn("__v", lit(0))
-          val wMerge = Window.partitionBy(keys.map(col): _*).orderBy(col("__v").desc)
-          current.unionByName(resolved.withColumn("__v", lit(1)))
-            .withColumn("__rn", row_number().over(wMerge))
-            .filter(col("__rn") === 1 && col(opCol) =!= "delete")
-            .drop("__rn", "__v", opCol)
-        }
-      val writerId = java.util.UUID.randomUUID().toString.take(12)
-      val dataDir = s"$base/data_$writerId"
-      merged.write.mode(SaveMode.ErrorIfExists).parquet(dataDir)
-      val nRows = ParquetRead(spark, dataDir).count()
-      import spark.implicits._
-      val manifest = Seq((dataDir, nRows, basedOn))
-        .toDF("data_dir", "n_rows", "based_on")
-      if (ManifestStore.tryPublish(spark, s"$base/manifest", manifest, basedOn + 1))
-        return basedOn + 1
-      // lost the version race: this merge used a stale base snapshot —
-      // discard it and re-merge against the winner's table
-      fs.delete(new Path(dataDir), true)
+    // the retry loop must not recompute the feed; the scope frees it
+    // once the merge commits
+    CheckpointIds.scoped(spark) { cp =>
+      val resolved = cp(cdc
+        .withColumn("__rn", row_number().over(wBatch))
+        .filter(col("__rn") === 1).drop("__rn", seqCol))
+      var committed = Option.empty[Long]
+      var attempt = 0
+      while (committed.isEmpty && attempt <= maxRetries) {
+        attempt += 1
+        val basedOn = ManifestStore.versions(spark, s"$base/manifest").lastOption.getOrElse(0L)
+        val merged =
+          if (basedOn == 0L) resolved.filter(col(opCol) =!= "delete").drop(opCol)
+          else {
+            val current = readCdcVersion(spark, base, basedOn)
+              .withColumn(opCol, lit("update")).withColumn("__v", lit(0))
+            val wMerge = Window.partitionBy(keys.map(col): _*).orderBy(col("__v").desc)
+            current.unionByName(resolved.withColumn("__v", lit(1)))
+              .withColumn("__rn", row_number().over(wMerge))
+              .filter(col("__rn") === 1 && col(opCol) =!= "delete")
+              .drop("__rn", "__v", opCol)
+          }
+        val writerId = java.util.UUID.randomUUID().toString.take(12)
+        val dataDir = s"$base/data_$writerId"
+        merged.write.mode(SaveMode.ErrorIfExists).parquet(dataDir)
+        val nRows = ParquetRead(spark, dataDir).count()
+        import spark.implicits._
+        val manifest = Seq((dataDir, nRows, basedOn))
+          .toDF("data_dir", "n_rows", "based_on")
+        if (ManifestStore.tryPublish(spark, s"$base/manifest", manifest, basedOn + 1))
+          committed = Some(basedOn + 1)
+        // lost the version race: this merge used a stale base snapshot —
+        // discard it and re-merge against the winner's table
+        else fs.delete(new Path(dataDir), true)
+      }
+      committed.getOrElse(throw new java.io.IOException(
+        s"CDC merge under $base lost the commit race $maxRetries times"))
     }
-    throw new java.io.IOException(
-      s"CDC merge under $base lost the commit race $maxRetries times")
   }
 
   /** The table as of a committed CDC version. */

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.{GraftSession, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ParquetRead
+import org.apache.spark.sql.graft.{CheckpointIds, ParquetRead}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -1443,12 +1443,11 @@ object Events {
       val byUser = Window.partitionBy("user_id").orderBy(col("n_purchases").desc)
       // materialize before the scope restores the provider and the
       // finally deletes the RocksDB checkpoint/state dirs
-      out
+      CheckpointIds.scoped(spark)(cp => cp(out
         .withColumn("rk", row_number().over(byUser)).filter(col("rk") === 1)
         .select(col("user_id"), col("n_purchases"),
           round(col("total_value"), 2).as("total_value"))
-        .orderBy("user_id")
-        .localCheckpoint()
+        .orderBy("user_id")))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
   }
 
@@ -1513,10 +1512,10 @@ object Events {
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
           org.apache.spark.sql.streaming.OutputMode.Append())
         .toDF("user_id", "session_start_us", "n_events", "duration_us")
-      runToMemory(sessions, "graft_timer_sess", "append", Some(base.toString + "/ckpt"))._1
-        .filter(col("user_id") >= 0)
-        .orderBy("user_id", "session_start_us")
-        .localCheckpoint()
+      CheckpointIds.scoped(spark)(cp => cp(
+        runToMemory(sessions, "graft_timer_sess", "append", Some(base.toString + "/ckpt"))._1
+          .filter(col("user_id") >= 0)
+          .orderBy("user_id", "session_start_us")))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
   }
   /** E32: per-key QUOTA enforcement in-stream — admit each user's
@@ -1574,12 +1573,11 @@ object Events {
       val (out, _) = runToMemory(updates, "graft_stream_quota", "update",
         Some(base.toString + "/ckpt"))
       val byUser = Window.partitionBy("user_id").orderBy(col("n_seen").desc)
-      out
+      CheckpointIds.scoped(spark)(cp => cp(out
         .withColumn("rk", row_number().over(byUser)).filter(col("rk") === 1)
         .select(col("user_id"), col("n_seen"), col("n_admitted"),
           col("admitted_id_sum"))
-        .orderBy("user_id")
-        .localCheckpoint()
+        .orderBy("user_id")))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
   }
 }

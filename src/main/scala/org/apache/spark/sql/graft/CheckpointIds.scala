@@ -26,9 +26,16 @@ import org.apache.spark.sql.execution.LogicalRDD
   * wraps exactly that RDD in the returned frame's `LogicalRDD`, so
   * these ids are the ones `localCheckpoint` persisted.
   *
-  * Iterative operators take their checkpoints through [[scoped]], the
-  * one owner of a loop's checkpoint lifetimes; a per-call checkpoint
-  * outside a loop takes [[latest]].
+  * Every checkpoint in graft is taken and freed here, through one of
+  * two entry points. [[scoped]] owns the checkpoints one call takes:
+  * when the call returns, it frees each one that the returned value
+  * does not read (and, within [[Scope.iterate]], each round's once the
+  * next round has run); what the result reads is left to the
+  * ContextCleaner, with the result. [[shared]] holds what one build
+  * checkpoints across calls, under a key and a version: a call with the
+  * held version gets the held value, a new version frees the replaced
+  * checkpoints, and [[release]] frees every hold of the application,
+  * blocking. Nothing else in graft frees a checkpoint.
   */
 object CheckpointIds {
   def of(frames: Dataset[_]*): Seq[Int] =
@@ -44,7 +51,10 @@ object CheckpointIds {
     * collections and options (the same walk [[Scope.iterate]] applies
     * to loop state).
     */
-  def scoped[T](spark: SparkSession)(body: Scope => T): T = {
+  def scoped[T](spark: SparkSession)(body: Scope => T): T = within(spark)(body)._1
+
+  // [[scoped]], also returning the scope's checkpoints that the value reads
+  private def within[T](spark: SparkSession)(body: Scope => T): (T, Seq[Int]) = {
     val scope = new Scope(spark.sparkContext)
     val result = try body(scope) catch {
       case e: Throwable =>
@@ -52,8 +62,7 @@ object CheckpointIds {
         try scope.freeAllBut(Set.empty) catch { case NonFatal(f) => e.addSuppressed(f) }
         throw e
     }
-    scope.freeAllBut(idsIn(result))
-    result
+    (result, scope.freeAllBut(idsIn(result)))
   }
 
   /** A checkpoint scope (see [[scoped]]).
@@ -68,9 +77,10 @@ object CheckpointIds {
     * demotes the join to a broadcast only at run time. With them a
     * round's node-sized state (ranks, labels) broadcasts at plan time
     * and the edge side is never re-shuffled. The same job can count a
-    * boolean column's true rows ([[counting]]), so a loop reads its
-    * convergence count without a job of its own. The leaf keeps the
-    * partitioning Spark gave it, which under AQE is unknown.
+    * boolean column's true rows, or all of them ([[counting]]), so a
+    * loop reads its convergence count without a job of its own. The
+    * leaf keeps the partitioning Spark gave it, which under AQE is
+    * unknown.
     *
     * The freed blocks are UNRECOVERABLE: `localCheckpoint` truncates
     * lineage, so a lazy plan that still reads a freed checkpoint fails
@@ -90,15 +100,24 @@ object CheckpointIds {
       */
     def apply[T](ds: Dataset[T]): Dataset[T] = take(ds, None)._1
 
+    /** [[apply]], also returning its row count, counted by the same job. */
+    def counting[T](ds: Dataset[T]): (Dataset[T], Long) = {
+      val (c, rows, _) = take(ds, None)
+      (c, rows)
+    }
+
     /** [[apply]], also returning the number of rows where the boolean
       * column `flag` is true, counted by the same job.
       */
-    def counting[T](ds: Dataset[T], flag: String): (Dataset[T], Long) = take(ds, Some(flag))
-
-    private def take[T](ds: Dataset[T], flag: Option[String]): (Dataset[T], Long) = {
-      val (c, flagged) = measured(ds, flag)
-      taken ++= of(c)
+    def counting[T](ds: Dataset[T], flag: String): (Dataset[T], Long) = {
+      val (c, _, flagged) = take(ds, Some(flag))
       (c, flagged)
+    }
+
+    private def take[T](ds: Dataset[T], flag: Option[String]): (Dataset[T], Long, Long) = {
+      val m = measured(ds, flag)
+      taken ++= of(m._1)
+      m
     }
 
     /** Run `step` from `init` until `done(state)` holds (checked before
@@ -129,8 +148,12 @@ object CheckpointIds {
       (state, rounds)
     }
 
-    private[CheckpointIds] def freeAllBut(keep: Set[Int]): Unit =
-      freeIds(sc, taken.filterNot(keep).toSeq)
+    // frees the checkpoints not in `keep`; returns the ones kept
+    private[CheckpointIds] def freeAllBut(keep: Set[Int]): Seq[Int] = {
+      val (kept, freed) = taken.toSeq.partition(keep)
+      freeIds(sc, freed)
+      kept
+    }
   }
 
   /** The checkpoint ids a value's frames read — through tuples, case
@@ -146,18 +169,15 @@ object CheckpointIds {
     of(frames(x).toSeq: _*).toSet
   }
 
-  // the checkpoint ids [[latest]] holds, per (application, key)
-  private val held = new java.util.concurrent.ConcurrentHashMap[(String, String), Seq[Int]]()
-
   /** A lazy `localCheckpoint` of `ds` materialized by one job over its
     * leaf's RDD, which returns each partition's rows, their summed
     * bytes and the rows where `flag` is true. The job still truncates
     * the lineage (`runJob` ends with `doCheckpoint`, which finds every
     * block cached). The leaf is restated with the rows and bytes as
-    * its statistics (see [[Scope]]); returns the frame and the flagged
-    * row count (0 without a flag).
+    * its statistics (see [[Scope]]); returns the frame, its row count
+    * and the flagged row count (0 without a flag).
     */
-  private def measured[T](ds: Dataset[T], flag: Option[String]): (Dataset[T], Long) = {
+  private def measured[T](ds: Dataset[T], flag: Option[String]): (Dataset[T], Long, Long) = {
     val c = ds.localCheckpoint(eager = false).asInstanceOf[classic.Dataset[T]]
     val leaf = c.logicalPlan.asInstanceOf[LogicalRDD]
     val at = flag.fold(-1)(c.schema.fieldIndex)
@@ -175,33 +195,64 @@ object CheckpointIds {
       }
       (n, bytes, flagged)
     })
-    val stats = Statistics(sizeInBytes = BigInt(parts.map(_._2).sum),
-      rowCount = Some(BigInt(parts.map(_._1).sum)))
+    val rows = parts.map(_._1).sum
+    val stats = Statistics(sizeInBytes = BigInt(parts.map(_._2).sum), rowCount = Some(BigInt(rows)))
     val stated = LogicalRDD(leaf.output, leaf.rdd, leaf.outputPartitioning,
       leaf.outputOrdering, leaf.isStreaming, leaf.stream)(
       c.sparkSession, Some(stats), Some(leaf.constraints))
-    (classic.Dataset(c.sparkSession, stated)(c.encoder), parts.map(_._3).sum)
+    (classic.Dataset(c.sparkSession, stated)(c.encoder), rows, parts.map(_._3).sum)
   }
 
-  /** Materialized `localCheckpoint` of `ds` that states its size (see
-    * [[Scope]]), held as the latest under `key`
-    * in this application: the next call with the same key frees it.
-    * For an operator that checkpoints per call outside any loop, so
-    * that a long-lived JVM keeps one call's blocks, not one per call.
-    * The blocks are unrecoverable (see [[Scope]]): the caller must
-    * materialize what reads the frame before the next call with the
-    * key replaces it.
+  // (application, key) -> the version [[shared]] holds, its value and
+  // its checkpoint ids; the map's monitor orders the calls
+  private val holds = mutable.Map.empty[(String, String), (Any, Any, Seq[Int])]
+
+  /** The value `build` makes in a [[Scope]], held with its checkpoints
+    * under `key` in this application. A later call with the same key and
+    * an equal `version` returns the held value and checkpoints nothing;
+    * one with another version first frees the held checkpoints, blocking,
+    * then builds. Calls run one at a time, so concurrent calls with the
+    * same key and version share one build. For a value that calls reuse
+    * while their input is unchanged (a table's snapshot in the version):
+    * a long-lived JVM keeps one build per key, not one per call. The
+    * blocks are unrecoverable (see [[Scope]]): what reads the held
+    * frames must be materialized before a new version or [[release]]
+    * frees them.
     */
-  def latest[T](spark: SparkSession, key: String)(ds: Dataset[T]): Dataset[T] = {
-    val (c, _) = measured(ds, None)
-    val sc = spark.sparkContext
-    Option(held.put((sc.applicationId, key), of(c))).foreach(freeIds(sc, _))
-    c
+  def shared[T](spark: SparkSession, key: String, version: Any)(build: Scope => T): T =
+    holds.synchronized {
+      val sc = spark.sparkContext
+      val at = (sc.applicationId, key)
+      holds.get(at) match {
+        case Some((`version`, value, _)) => value.asInstanceOf[T]
+        case stale =>
+          stale.foreach(h => freeIds(sc, h._3, blocking = true))
+          holds -= at
+          val (value, ids) = within(spark)(build)
+          holds(at) = (version, value, ids)
+          value
+      }
+    }
+
+  /** Frees every checkpoint [[shared]] holds in this application,
+    * blocking, so the blocks are gone when it returns, and forgets every
+    * hold (a stopped application's ids alias this context's RDDs, so
+    * they are not freed).
+    */
+  def release(spark: SparkSession): Unit = holds.synchronized {
+    freeIds(spark.sparkContext, held(spark), blocking = true)
+    holds.clear()
   }
 
-  /** Non-blocking unpersist by raw RDD id. */
-  private def freeIds(sc: SparkContext, ids: Seq[Int]): Unit = {
+  /** The checkpoint ids [[shared]] holds in this application. */
+  def held(spark: SparkSession): Seq[Int] = holds.synchronized {
+    val app = spark.sparkContext.applicationId
+    holds.toSeq.collect { case ((`app`, _), (_, _, ids)) => ids }.flatten.sorted
+  }
+
+  /** Unpersist by raw RDD id. */
+  private def freeIds(sc: SparkContext, ids: Seq[Int], blocking: Boolean = false): Unit = {
     val persisted = sc.getPersistentRDDs
-    ids.foreach(id => persisted.get(id).foreach(_.unpersist(blocking = false)))
+    ids.foreach(id => persisted.get(id).foreach(_.unpersist(blocking)))
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -69,9 +67,12 @@ class CheckpointStatsSpec extends SparkSpec {
       val (d, n) = cp.counting(df, "f")
       assert(n == flagged && flagged > 0, "the same job counts the true, non-null flags")
       assert(stats(d).sizeInBytes == BigInt(bytes))
+      val (_, rows) = cp.counting(df)
+      assert(rows == 1000L, "without a flag the same job counts every row")
     }
-    val held = CheckpointIds.latest(spark, "spec.stats")(df)
+    val held = CheckpointIds.shared(spark, "spec.stats", 0)(cp => cp(df))
     assert(stats(held).rowCount.contains(BigInt(1000)) && stats(held).sizeInBytes == BigInt(bytes))
+    CheckpointIds.release(spark)
   }
 
   test("a pageRankOf round broadcasts its ranks at plan time and never shuffles the edges") {
@@ -147,30 +148,5 @@ class CheckpointStatsSpec extends SparkSpec {
     assert(labels == lbl)
     assert(labels.values.toSet == Set(2L, 20L, 30L))
     assert(rounds == replay && rounds > 2, s"$rounds rounds against the replay's $replay")
-  }
-
-  test("partsGraph's memo reads a lineitem rewritten in place, and frees the stale triangles") {
-    val dir = Files.createTempDirectory("graft_parts").toString
-    val fresh = Files.createTempDirectory("graft_parts_fresh").toString
-    Files.copy(Paths.get(Tables.path(sfDir, "lineitem")), Paths.get(Tables.path(dir, "lineitem")))
-    def rows(df: DataFrame) = df.collect().map(_.toString).toSeq
-    Graph.dropSharedCache(spark)
-    val before = rows(Graph.clusteringCoeff(spark, dir))
-    val stale = Graph.sharedCacheRddIds(spark)
-    assert(stale.nonEmpty)
-    // rewrite the same path with half the orders
-    val half = Tables.load(spark, dir, "lineitem").filter(col("l_orderkey") % 2 === 0)
-    half.write.parquet(Tables.path(fresh, "lineitem"))
-    val staged = s"$dir/staged"
-    spark.read.parquet(Tables.path(fresh, "lineitem")).write.parquet(staged)
-    Files.delete(Paths.get(Tables.path(dir, "lineitem")))
-    Files.move(Paths.get(staged), Paths.get(Tables.path(dir, "lineitem")))
-    val after = rows(Graph.clusteringCoeff(spark, dir))
-    val expected = rows(Graph.clusteringCoeff(spark, fresh))
-    assert(after == expected)
-    assert(after != before, "the rewrite must change the clustering for the check to bite")
-    val live = spark.sparkContext.getPersistentRDDs.keySet
-    assert(stale.forall(id => !live.contains(id)), "the replaced snapshot's blocks are freed")
-    Graph.dropSharedCache(spark)
   }
 }

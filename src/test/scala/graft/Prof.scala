@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
-import org.apache.spark.sql.graft.QueryCost
+import org.apache.spark.sql.graft.{CheckpointIds, QueryCost}
 
 import scala.jdk.CollectionConverters._
 
@@ -11,8 +11,10 @@ import scala.jdk.CollectionConverters._
   * ([[QueryCost]]). It is test code, so it does not ship in the
   * product jar. Run `sbt "Test/runMain graft.Prof <mode> …"`:
   *
-  *   - `time <sfDir> <query>…`: each run's wall time, persisted RDDs
-  *     and used heap, then the warm median and min;
+  *   - `time <sfDir> <query>…`: each run's wall time, persisted RDDs,
+  *     the checkpoints held across calls ([[CheckpointIds.held]]; the
+  *     rest of the persisted RDDs are the run's own) and used heap, then
+  *     the warm median and min;
   *   - `stages <sfDir> <query> [warmRuns=1]`: the jobs and stages of
   *     one run after `warmRuns` unmeasured ones, stages by task time,
   *     and the driver gap outside jobs;
@@ -71,6 +73,7 @@ object Prof {
       val t = Bench.timeQuery(spark, q, dir, each = { sec =>
         run += 1
         println(f"RUN $q $run t=$sec%.3f persistedRDDs=${spark.sparkContext.getPersistentRDDs.size} " +
+          s"held=${CheckpointIds.held(spark).size} " +
           s"usedHeapMB=${(rt.totalMemory - rt.freeMemory) >> 20}")
       })
       println(f"TIME $q $dir median=${t.median}%.3f min=${t.min}%.3f")

@@ -35,7 +35,7 @@ class ProfSpec extends SparkSpec {
   test("Prof time prints every run: one cold and three warm") {
     val runs = printed("time", sfDir, "q1_agg").linesIterator.filter(_.startsWith("RUN q1_agg")).toList
     assert(runs.size == 4, runs)
-    assert(runs.forall(_.contains("persistedRDDs=")), runs)
+    assert(runs.forall(r => r.contains("persistedRDDs=") && r.contains(" held=")), runs)
   }
 
   test("Prof threads prints one line a run with every pool's count") {

@@ -1,46 +1,10 @@
 package graft
 
-/** Round-8 specs: the two VERDICT r7 pins —
-  *   1. the G2/G8 shared-cache leak (the only weak grade): prove
-  *      `Graph.dropSharedCache` actually frees the localCheckpoint'ed
-  *      RDD blocks, not just the memo map;
-  *   2. the D2 PPJoin candidate law at the 10× scale step, the same
-  *      empirical treatment Round14Spec gave ann_knn_lsh.
+/** Round-8 specs: the D2 PPJoin candidate law at the 10× scale step,
+  * the same empirical treatment Round14Spec gave ann_knn_lsh (the other
+  * VERDICT r7 pin, the G2/G8 shared-cache leak, is CheckpointScopeSpec's).
   */
 class Round16Spec extends SparkSpec {
-
-  test("g_clustering shared cache: dropSharedCache frees the checkpoint blocks (r7 driver pathology)") {
-    import graft.operators.Graph
-    // The r7 driver-box pathology: dropSharedCache() cleared the memo
-    // TrieMap but left the localCheckpoint'ed pp/stream RDD blocks to
-    // the lazy ContextCleaner, so a long one-JVM bench sweep
-    // accumulated orphaned MEMORY_AND_DISK blocks until eviction
-    // churn dominated (g_clustering 67.7 s vs its own ~12.6 s base).
-    // The observable is the SPECIFIC ids the shared pass recorded —
-    // global persistent-RDD counts would race the async ContextCleaner
-    // collecting other suites' orphans (review finding, round 8):
-    // after every drop, none of the recorded ids may remain persisted.
-    Graph.dropSharedCache(spark) // clear any earlier suite's artifacts
-    (1 to 4).foreach { i =>
-      SparkEntry.queries("g_clustering")(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      val mine = Graph.sharedCacheRddIds(spark)
-      assert(mine.nonEmpty,
-        s"iteration $i: the shared pass recorded no checkpoint ids — " +
-          "the observable is vacuous")
-      val persistedNow = spark.sparkContext.getPersistentRDDs.keySet
-      assert(mine.forall(persistedNow.contains),
-        s"iteration $i: recorded ids $mine not all persisted — " +
-          "the id capture is broken")
-      Graph.dropSharedCache(spark)
-      val persistedAfter = spark.sparkContext.getPersistentRDDs.keySet
-      val leaked = mine.filter(persistedAfter.contains)
-      assert(leaked.isEmpty,
-        s"iteration $i: checkpoint RDDs $leaked survive dropSharedCache " +
-          "— orphaned blocks accumulate across a bench sweep exactly " +
-          "as in BENCH_r07")
-    }
-  }
 
   test("dedup_ngram_jaccard: PPJoin candidates are corpus-linear at the 10x scale step") {
     import graft.operators.Dedup

@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
 /** The shared session is borrowed one way: its conf is written only by
   * `GraftSession.withConf` (and `IOQueries.ensureCatalog`, which
   * registers the catalog for good), and a stream is drained into a
-  * memory sink only by `Events.runToMemory`. Reads `src/main/scala`.
+  * memory sink only by `Events.runToMemory`; a checkpoint is taken and
+  * freed only by `CheckpointIds`. Reads `src/main/scala`.
   */
 class SessionBorrowGuardSpec extends AnyFunSuite {
   import SessionBorrowGuardSpec._
@@ -65,6 +66,19 @@ class SessionBorrowGuardSpec extends AnyFunSuite {
     assert(found == Seq("graft/streaming/Events.scala" -> "runToMemory"))
   }
 
+  test("a checkpoint is taken and freed only in CheckpointIds") {
+    val found = sources.flatMap { case (file, lines) =>
+      sites(lines, checkpointCall).map { case (_, line) => (file, line) }
+    }
+    val owner = "org/apache/spark/sql/graft/CheckpointIds.scala"
+    val stray = found.filterNot(_._1 == owner)
+    if (stray.nonEmpty) fail(stray.map { case (f, l) => s"$f: $l" }
+      .mkString("checkpoint taken or freed outside CheckpointIds:\n", "\n", ""))
+    Seq("localCheckpoint(", "getPersistentRDDs", "unpersist(").foreach { call =>
+      assert(found.exists(_._2.contains(call)), s"the guard sees no $call where calls are")
+    }
+  }
+
   test("the RocksDB state store provider is named once") {
     val rocksDb = "RocksDBStateStoreProvider"
     val found = sources.flatMap { case (file, lines) =>
@@ -81,6 +95,7 @@ object SessionBorrowGuardSpec {
   private val directWrite = """\.conf\.(set|unset)\w*\(|\b(setConf|setConfString|unsetConf)\(""".r
   private val confAlias = """\bval\s+(\w+)\s*=\s*[\w.]+\.conf\s*$""".r.unanchored
   private val memorySinkFormat = """format\("memory"\)""".r
+  private val checkpointCallName = """localCheckpoint\(|getPersistentRDDs|unpersist\(""".r
 
   type Detector = Seq[String] => String => Boolean
 
@@ -92,6 +107,8 @@ object SessionBorrowGuardSpec {
   }
 
   val memorySink: Detector = _ => line => memorySinkFormat.findFirstIn(line).isDefined
+
+  val checkpointCall: Detector = _ => line => checkpointCallName.findFirstIn(line).isDefined
 
   /** An object's member definition: the name of the enclosing member. */
   private val member =
